@@ -23,8 +23,11 @@ broadcast join (SURVEY §4).
 
 Scale notes: master data (products/customers) broadcasts; the only
 shuffle is the dropDuplicates on the dedup key, which at 100 TB rides
-the same hash partitioning the fact table is written with. The fact
-is written partitioned by (year, month) — time-range queries prune.
+the same hash partitioning the fact table is written with. The
+parquet, bloom and Delta warehouses write the fact partitioned by
+(year, month) — time-range queries prune by directory; the manifest
+warehouse writes unpartitioned segments with order_date zone maps
+instead (see ``ManifestWarehouse``).
 """
 
 from __future__ import annotations
@@ -209,23 +212,29 @@ class MaintainedAggregate:
     in as mills — ``_fact_revenue_mills``; the serve wrapper divides
     back out).
 
-    State: two manifest tables.
+    State: ONE manifest table, ``<agg>``, holding per-snapshot
+    PARTIAL sums keyed (fact_snapshot, *group keys) plus an
+    ``n_rows`` count measure. Positive partials fold the
+    ``added_between`` insert diff; NEGATIVE partials fold the
+    ``deleted_between`` tombstone diff (keyed at the hiding
+    tombstone's snapshot — a snapshot that never holds a positive
+    partial, so keys cannot collide). ``n_rows`` nets to zero for a
+    fully-deleted group, which the serve path filters out — matching
+    the recomputed view, which has no row for an empty group.
 
-    - ``<agg>``: per-snapshot PARTIAL sums keyed (fact_snapshot,
-      *group keys) plus an ``n_rows`` count measure. Positive
-      partials fold the ``added_between`` insert diff; NEGATIVE
-      partials fold the ``deleted_between`` tombstone diff (keyed at
-      the hiding tombstone's snapshot — a snapshot that never holds a
-      positive partial, so keys cannot collide). ``n_rows`` nets to
-      zero for a fully-deleted group, which the serve path filters
-      out — matching the recomputed view, which has no row for an
-      empty group.
-    - ``<agg>__hwm``: one row per completed refresh (``upto`` = the
-      fact snapshot folded to), keyed on ``upto``. The fold horizon
-      is max(upto) — deliberately NOT max(fact_snapshot) in the agg,
-      because a REBASE refolds rows tagged with their original (old)
-      snapshots and max(fact_snapshot) would then re-trigger the
-      rebase forever.
+    The fold HORIZON (the fact snapshot folded to) lives in the
+    table's own manifests: each refresh commits its partials with
+    ``insert_with_horizon``, which records ``upto`` in that commit's
+    manifest, and the horizon is the max ``upto`` over the committed
+    manifests (``ManifestParquetSink.horizon`` — metadata only, no
+    Spark job). Fold and horizon therefore land atomically, and
+    covering commits (compaction, truncation) carry the max forward.
+    It is deliberately NOT max(fact_snapshot) in the partials,
+    because a REBASE refolds rows tagged with their original (old)
+    snapshots and max(fact_snapshot) would then re-trigger the rebase
+    forever. A table written before the horizon moved into the
+    manifests reads as never folded: the first refresh refolds from
+    the beginning and every partial it re-derives anti-joins away.
 
     Refresh algebra (all replay-safe: every commit is
     insert-if-absent of rows derived from immutable snapshot diffs,
@@ -240,7 +249,9 @@ class MaintainedAggregate:
        history, so the refold is exact by construction.
     2. Fold positives from ``added_between(last, latest)`` and
        negatives from ``deleted_between(last, latest)`` in one
-       commit; then commit the hwm row.
+       commit that also records ``upto = latest`` (a rebase that
+       refolds nothing commits a zero-row segment carrying only the
+       horizon).
 
     Cost at scale: a refresh with no deletes reads O(new segments)
     fact rows (one map-side-combinable groupBy), never the
@@ -267,19 +278,11 @@ class MaintainedAggregate:
         self.sink = sink
         self.fact_table = fact_table
         self.agg_table = agg_table
-        self.hwm_table = f"{agg_table}__hwm"
         self.group_by = dict(group_by)
         self.measures = dict(measures)
         sink.keys.setdefault(
             agg_table, ["fact_snapshot", *self.group_by]
         )
-        sink.keys.setdefault(self.hwm_table, ["upto"])
-
-    def _hwm(self) -> int | None:
-        hwm = self.sink.read(self.hwm_table)
-        if hwm is None:
-            return None
-        return hwm.agg(F.max("upto")).first()[0]
 
     def _partial(self, diff: DataFrame, snap_col: str, sign: int):
         return diff.groupBy(
@@ -306,7 +309,7 @@ class MaintainedAggregate:
         if not snaps:
             return None
         latest = snaps[-1]
-        last = self._hwm()
+        last = sink.horizon(self.agg_table)
         if last is not None and last >= latest:
             return None
         rebase = bool(
@@ -347,12 +350,7 @@ class MaintainedAggregate:
         if neg is not None:
             n = self._partial(neg, "_deleted_at", -1)
             partial = n if partial is None else partial.unionByName(n)
-        if partial is not None:
-            sink.insert_if_absent(self.agg_table, partial)
-        sink.insert_if_absent(
-            self.hwm_table,
-            sink.spark.createDataFrame([(latest,)], "upto long"),
-        )
+        sink.insert_with_horizon(self.agg_table, partial, latest)
         return latest
 
     def serve(self) -> DataFrame:
@@ -486,17 +484,25 @@ class WarehouseOps:
             dims = normalize_dimensions(products_master, customers_master)
             for name, df in dims.items():
                 self.insert_if_absent(name, df)
-        fact = build_fact(transactions, products_master, customers_master, fact_key)
-        src = "time_id" if time_id_source == "stream" else None
-        self.insert_if_absent(
-            "time_dimension", time_dimension(fact, "order_date", source_col=src)
-        )
-        fact_cols = [
-            "order_id", "order_date", "product_id", "customer_id", "supplier_id",
-            "store_id", "quantity_ordered", "total_units_sold", "total_revenue",
-            "year", "month",
-        ]
-        self.insert_if_absent("sales_fact", fact.select(*fact_cols))
+        # both inserts below derive from the fact: persist it so the
+        # source batch is scanned and joined once, not once per insert
+        fact = build_fact(
+            transactions, products_master, customers_master, fact_key
+        ).persist()
+        try:
+            src = "time_id" if time_id_source == "stream" else None
+            self.insert_if_absent(
+                "time_dimension",
+                time_dimension(fact, "order_date", source_col=src),
+            )
+            fact_cols = [
+                "order_id", "order_date", "product_id", "customer_id",
+                "supplier_id", "store_id", "quantity_ordered",
+                "total_units_sold", "total_revenue", "year", "month",
+            ]
+            self.insert_if_absent("sales_fact", fact.select(*fact_cols))
+        finally:
+            fact.unpersist()
 
     def totals(self) -> DataFrame:
         """Running totals the reference prints after each batch
@@ -533,13 +539,22 @@ class ParquetWarehouse(WarehouseOps, ParquetAntiJoinSink):
 class ManifestWarehouse(WarehouseOps, ManifestParquetSink):
     """The star-schema warehouse over manifest-committed segments:
     crash-atomic batch visibility on plain parquet, no optional
-    dependency (see operators.sinks.ManifestParquetSink)."""
+    dependency (see operators.sinks.ManifestParquetSink).
+
+    Layout: ``sales_fact`` is NOT hive-partitioned here. Each
+    micro-batch commits one unpartitioned segment (a few files,
+    however many months it spans — a (year, month) split would write one
+    tiny file per month per batch) with ``order_date`` zone maps in
+    its manifest, so ``scan("sales_fact", {"order_date": (lo, hi)})``
+    skips whole segments and files instead of month directories — the
+    layout ``plans.fact_store`` uses. The other backends keep
+    ``WAREHOUSE_PARTITIONING``."""
 
     keys: dict[str, list[str]] = field(
         default_factory=lambda: dict(WAREHOUSE_KEYS)
     )
-    partitioning: dict[str, list[str]] = field(
-        default_factory=lambda: dict(WAREHOUSE_PARTITIONING)
+    stats_cols: dict[str, list[str]] = field(
+        default_factory=lambda: {"sales_fact": ["order_date"]}
     )
 
 

@@ -68,6 +68,47 @@ def delta_available() -> bool:
         return False
 
 
+def _nullable(t):
+    """A JSON data type (``DataType.jsonValue``) with every field,
+    array element and map value made nullable — parquet reads always
+    return nullable types, so a recorded schema must too."""
+    if not isinstance(t, dict):
+        return t
+    kind = t.get("type")
+    if kind == "struct":
+        return {
+            **t,
+            "fields": [
+                {**f, "nullable": True, "type": _nullable(f["type"])}
+                for f in t["fields"]
+            ],
+        }
+    if kind == "array":
+        return {
+            **t,
+            "containsNull": True,
+            "elementType": _nullable(t["elementType"]),
+        }
+    if kind == "map":
+        return {
+            **t,
+            "valueContainsNull": True,
+            "keyType": _nullable(t["keyType"]),
+            "valueType": _nullable(t["valueType"]),
+        }
+    return t
+
+
+def _read_schema_json(schema: T.StructType, parts: list[str]) -> dict:
+    """The schema a parquet reader of a segment written from
+    ``schema`` (hive-partitioned on ``parts``) returns, as JSON: data
+    columns in written order, then the partition columns, all
+    nullable."""
+    fields = [f for f in schema.fields if f.name not in parts]
+    fields += [schema[p] for p in parts]
+    return _nullable(T.StructType(fields).jsonValue())
+
+
 @dataclass
 class MergeSink:
     """Shared shape of a keyed insert-if-absent table store.
@@ -457,6 +498,12 @@ class ManifestParquetSink(MergeSink):
     racing-writers/racing-compaction suite runs against BOTH
     primitives (tests/test_sinks.py).
 
+    Besides the file list, each manifest records the segment's read
+    schema (readers pass it to Spark instead of inferring it from a
+    footer, one Spark job per read saved) and, for commits made
+    through ``insert_with_horizon``, the source snapshot an
+    incremental consumer has folded to (``horizon``).
+
     Superseded-directory GC (after compaction) assumes a one-batch
     vacuum horizon, exactly like Delta's VACUUM: a lazy reader plan
     older than one writer turn may lose its files and must re-read.
@@ -748,11 +795,12 @@ class ManifestParquetSink(MergeSink):
     def _stage_segment(
         self,
         name: str,
-        df: DataFrame,
+        df: DataFrame | None,
         covers: set[int] | None = None,
         min_row: int | None = None,
         tombstone_on: list[str] | None = None,
         redacted_at: list[int] | None = None,
+        upto: int | None = None,
     ) -> str:
         """Write ``df`` (hive-partitioned when configured) plus its
         complete ``_COMMITTED.json`` manifest into a fresh staging
@@ -761,10 +809,19 @@ class ManifestParquetSink(MergeSink):
         (rename protocol) or a create-if-absent of the commit object
         (objectstore protocol, where this directory is ALREADY at its
         permanent content-addressed location and is never moved).
+        ``df=None`` stages a zero-file segment: a manifest-only commit
+        (it carries ``upto`` — see ``insert_with_horizon``).
 
         The manifest records the staged data bytes (``bytes``) so the
         size-tiered auto-compaction policy reads segment sizes from
-        manifests, never by walking data directories."""
+        manifests, never by walking data directories, the row count
+        (``rows``, omitted when any footer is unreadable — an
+        undercount would make ``window_admission_rows`` report an
+        admitting window as empty), and the segment's READ schema
+        (``schema``: data columns, then partition columns, all
+        nullable — what parquet inference would return), which readers
+        pass to ``spark.read.schema`` instead of paying one inference
+        job per read (see ``_read_parquet``)."""
         import glob
         import json
         import uuid
@@ -774,31 +831,44 @@ class ManifestParquetSink(MergeSink):
         stage = os.path.join(
             tdir, f"{prefix}{os.getpid()}_{uuid.uuid4().hex[:12]}"
         )
-        writer = df.write.mode("error")
         # tombstone segments hold the bare key relation — never the
         # table's hive layout (the partition columns may not exist)
-        parts = None if tombstone_on else self.partitioning.get(name)
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(stage)
-        files = sorted(
-            os.path.relpath(p, stage)
-            for p in glob.glob(
-                os.path.join(stage, "**", "*.parquet"), recursive=True
+        parts = (None if tombstone_on else self.partitioning.get(name)) or []
+        if df is None:
+            os.makedirs(stage)
+            files: list[str] = []
+        else:
+            writer = df.write.mode("error")
+            if parts:
+                writer = writer.partitionBy(*parts)
+            writer.parquet(stage)
+            files = sorted(
+                os.path.relpath(p, stage)
+                for p in glob.glob(
+                    os.path.join(stage, "**", "*.parquet"), recursive=True
+                )
             )
-        )
         import pyarrow.parquet as papq
 
         nbytes = 0
-        nrows = 0
+        nrows: int | None = 0
         for rel in files:
             fp = os.path.join(stage, rel)
             try:
                 nbytes += os.path.getsize(fp)
-                nrows += papq.ParquetFile(fp).metadata.num_rows
+                n = papq.ParquetFile(fp).metadata.num_rows
             except OSError:
-                pass
-        meta: dict = {"files": files, "bytes": nbytes, "rows": nrows}
+                nrows = None
+                continue
+            if nrows is not None:
+                nrows += n
+        meta: dict = {"files": files, "bytes": nbytes}
+        if nrows is not None:
+            meta["rows"] = nrows
+        if df is not None:
+            meta["schema"] = _read_schema_json(df.schema, parts)
+        if upto is not None:
+            meta["upto"] = int(upto)
         if tombstone_on is not None:
             meta["tombstone_on"] = list(tombstone_on)
         if redacted_at:
@@ -928,6 +998,37 @@ class ManifestParquetSink(MergeSink):
         except (OSError, ValueError):
             return {}
 
+    def _recorded_schema(self, segs: list[str]) -> T.StructType | None:
+        """The read schema every segment in ``segs`` recorded at
+        commit, or None — infer instead — when one did not (a manifest
+        written before the field existed), when they differ, or under
+        ``allow_schema_evolution`` (footer merging unifies there)."""
+        if self.allow_schema_evolution:
+            return None
+        first = None
+        for seg in segs:
+            rec = self._manifest_meta(seg).get("schema")
+            if rec is None or (first is not None and rec != first):
+                return None
+            first = rec
+        return None if first is None else T.StructType.fromJson(first)
+
+    def _read_parquet(
+        self, segs: list[str], paths: list[str] | None = None
+    ) -> DataFrame:
+        """One parquet reader over the segment directories ``segs`` (or
+        over ``paths``, data files inside them) with the schema their
+        manifests recorded, so the read launches no inference job;
+        inferred — merging footers under ``allow_schema_evolution`` —
+        when there is no common recorded schema."""
+        reader = self.spark.read
+        schema = self._recorded_schema(segs)
+        if schema is not None:
+            reader = reader.schema(schema)
+        elif self.allow_schema_evolution:
+            reader = reader.option("mergeSchema", "true")
+        return reader.parquet(*(segs if paths is None else paths))
+
     def _segment_stats(self, seg: str) -> dict[str, list | None]:
         """The committed manifest's zone-map entry ({} when the
         segment predates ``stats_cols`` or records none)."""
@@ -1035,14 +1136,15 @@ class ManifestParquetSink(MergeSink):
         ranges: dict[str, tuple],
     ) -> DataFrame | None:
         plain, compacted, _ = self._pruned_paths(live, ranges)
-        reader = self.spark.read
-        if self.allow_schema_evolution:
-            reader = reader.option("mergeSchema", "true")
         dfs = []
         if plain:
-            dfs.append(reader.parquet(*plain))
+            segs = [seg for _, seg, covers in live if covers is None]
+            dfs.append(self._read_parquet(segs, plain))
         if compacted:
-            dfs.append(reader.parquet(*compacted).drop("_snapshot"))
+            segs = [seg for _, seg, covers in live if covers is not None]
+            dfs.append(
+                self._read_parquet(segs, compacted).drop("_snapshot")
+            )
         if not dfs:
             return None
         out = dfs[0]
@@ -1177,13 +1279,13 @@ class ManifestParquetSink(MergeSink):
             if covers is None:
                 if n > snapshot:
                     continue
-                df = self.spark.read.parquet(seg).withColumn(
+                df = self._read_parquet([seg]).withColumn(
                     "_snapshot", F.lit(n).cast("long")
                 )
             else:
                 if self._manifest_min_row(seg, covers) > snapshot:
                     continue
-                df = self.spark.read.parquet(seg).filter(
+                df = self._read_parquet([seg]).filter(
                     F.col("_snapshot") <= F.lit(snapshot)
                 )
             out = df if out is None else self._union(out, df)
@@ -1278,7 +1380,7 @@ class ManifestParquetSink(MergeSink):
             trel = None
             for n, p in segs:
                 t = (
-                    self.spark.read.parquet(p)
+                    self._read_parquet([p])
                     .select(*[F.col(c).alias(f"__ts_{c}") for c in on])
                     .withColumn("__ts_snap", F.lit(n).cast("long"))
                 )
@@ -1307,12 +1409,9 @@ class ManifestParquetSink(MergeSink):
         if not live:
             return None
         if tombs:
-            reader = self.spark.read
-            if self.allow_schema_evolution:
-                reader = reader.option("mergeSchema", "true")
             out = None
             for n, seg, covers in live:
-                df = reader.parquet(seg)
+                df = self._read_parquet([seg])
                 if covers is None:
                     df = df.withColumn(
                         "_snapshot", F.lit(n).cast("long")
@@ -1322,25 +1421,21 @@ class ManifestParquetSink(MergeSink):
         plain = [seg for _, seg, covers in live if covers is None]
         compacted = [seg for _, seg, covers in live if covers is not None]
         parts = self.partitioning.get(name)
-        reader = self.spark.read
-        if self.allow_schema_evolution:
-            # evolved segments differ in columns; footer merge unifies
-            reader = reader.option("mergeSchema", "true")
         dfs = []
         if plain:
             if parts and len(plain) > 1:
                 # hive-partitioned segments cannot share one reader
                 # (no valid common basePath: seg_N is not a k=v dir),
                 # so each keeps its own partition discovery
-                dfs.extend(reader.parquet(p) for p in plain)
+                dfs.extend(self._read_parquet([p]) for p in plain)
             else:
                 # ONE multi-path reader: this is the per-micro-batch
                 # hot path (the anti-join reads the table every
                 # insert), and N separate readers + N-1 unions cost
                 # O(N) driver plan-building per batch
-                dfs.append(reader.parquet(*plain))
+                dfs.append(self._read_parquet(plain))
         for seg in compacted:
-            dfs.append(reader.parquet(seg).drop("_snapshot"))
+            dfs.append(self._read_parquet([seg]).drop("_snapshot"))
         out = dfs[0]
         for df in dfs[1:]:
             out = self._union(out, df)
@@ -1393,13 +1488,13 @@ class ManifestParquetSink(MergeSink):
             if covers is None:
                 if not (lo < n <= until):
                     continue
-                df = self.spark.read.parquet(seg).withColumn(
+                df = self._read_parquet([seg]).withColumn(
                     "_snapshot", F.lit(n).cast("long")
                 )
             else:
                 if covers and (covers[0] > until or covers[-1] <= lo):
                     continue
-                df = self.spark.read.parquet(seg).filter(
+                df = self._read_parquet([seg]).filter(
                     (F.col("_snapshot") > F.lit(lo))
                     & (F.col("_snapshot") <= F.lit(until))
                 )
@@ -1541,7 +1636,7 @@ class ManifestParquetSink(MergeSink):
         out = None
         cur = base
         for n, p, on in new_tombs:
-            trel = self.spark.read.parquet(p).select(
+            trel = self._read_parquet([p]).select(
                 *[F.col(c).alias(f"__ts_{c}") for c in on]
             )
             cond = F.col("_snapshot") < F.lit(n).cast("long")
@@ -1576,10 +1671,7 @@ class ManifestParquetSink(MergeSink):
                 return None
             rows, _ = self._list_committed(name)
             live_nums = {n for n, _, _ in live}
-            meta_rows = {
-                n: meta.get("rows", 0) for n, _, meta in rows
-            }
-            if all(meta_rows.get(n, 0) == 0 for n in live_nums):
+            if all(self._segment_rows(p) == 0 for _, p, _ in live):
                 return None  # already empty — replayed truncate
             tomb_nums = {n for n, _, _ in tombs}
             covers = set(live_nums) | set(tomb_nums) | {
@@ -1597,6 +1689,7 @@ class ManifestParquetSink(MergeSink):
                     covers=covers,
                     min_row=nxt,
                     redacted_at=carry + [nxt],
+                    upto=self._carry_upto(rows, covers),
                 )
             except Exception as exc:
                 if not self._is_vanished_input(exc):
@@ -1610,19 +1703,62 @@ class ManifestParquetSink(MergeSink):
         return nxt
 
     def insert_if_absent(self, name: str, batch: DataFrame) -> None:
+        self._insert(name, batch)
+
+    def insert_with_horizon(
+        self, name: str, batch: DataFrame | None, upto: int
+    ) -> None:
+        """``insert_if_absent`` that also records ``upto`` — the source
+        snapshot an incremental consumer has folded to — in the SAME
+        commit's manifest, so a fold and its horizon land atomically
+        in one table (read back by ``horizon``). ``batch=None``
+        commits a zero-row segment carrying only the horizon: a fold
+        with nothing to add, e.g. a rebase onto an emptied source."""
+        self._insert(name, batch, upto=upto)
+
+    def horizon(self, name: str) -> int | None:
+        """The largest ``upto`` recorded by any committed manifest of
+        ``name`` (see ``insert_with_horizon``), or None when none
+        records one. Manifest metadata only — no Spark job. Covering
+        commits carry the maximum of what they cover forward, so the
+        horizon survives compaction, truncation and GC."""
+        rows, _ = self._list_committed(name)
+        return self._carry_upto(rows, None)
+
+    def _carry_upto(
+        self, rows: list[tuple[int, str, dict]], nums: set[int] | None
+    ) -> int | None:
+        """Max ``upto`` across the committed manifests whose snapshot
+        number is in ``nums`` (all of them when None) — what a
+        covering commit must carry forward."""
+        marks = [
+            int(meta["upto"])
+            for n, _, meta in rows
+            if meta.get("upto") is not None and (nums is None or n in nums)
+        ]
+        return max(marks, default=None)
+
+    def _insert(
+        self, name: str, batch: DataFrame | None, upto: int | None = None
+    ) -> None:
+        """The insert-if-absent core behind ``insert_if_absent`` and
+        ``insert_with_horizon``: anti-join, stage, OCC publish, then
+        the auto-maintenance policy."""
         import shutil
 
         # deferred-deletion GC first (see _gc_superseded): dirs a
         # PREVIOUS batch's auto-compaction superseded can go now
         self._gc_superseded(name)
-        key = self.keys[name]
-        missing_keys = [k for k in key if k not in batch.columns]
-        if missing_keys:
-            raise ValueError(
-                f"batch for table {name!r} omits key columns "
-                f"{missing_keys} — keys cannot evolve away"
-            )
-        base = batch.dropDuplicates(key)
+        base = None
+        if batch is not None:
+            key = self.keys[name]
+            missing_keys = [k for k in key if k not in batch.columns]
+            if missing_keys:
+                raise ValueError(
+                    f"batch for table {name!r} omits key columns "
+                    f"{missing_keys} — keys cannot evolve away"
+                )
+            base = batch.dropDuplicates(key)
         while True:
             # one OCC attempt: anti-join against exactly the segments
             # of THIS listing, stage, then try to publish at next.
@@ -1630,10 +1766,15 @@ class ManifestParquetSink(MergeSink):
             # key is genuinely absent and RE-ADMITS here (its new row's
             # snapshot is above every tombstone that names it).
             live, tombs, _, nxt = self._split_live(name)
-            existing = self._read_live(name, live, tombs)
             incoming = base
+            existing = None
+            if base is not None:
+                existing = self._read_live(name, live, tombs)
             if existing is not None:
-                seen = existing.select(*key).dropDuplicates(key).select(
+                # no dropDuplicates on the seen side: a left-anti join
+                # is indifferent to duplicate right-side keys, and the
+                # dedup would shuffle the whole accumulated key set
+                seen = existing.select(
                     *[F.col(k).alias(f"__seen_{k}") for k in key]
                 )
                 cond = F.lit(True)
@@ -1642,7 +1783,7 @@ class ManifestParquetSink(MergeSink):
                 incoming = incoming.join(seen, cond, "left_anti")
                 incoming = self._align_schema(name, incoming, existing)
             try:
-                stage = self._stage_segment(name, incoming)
+                stage = self._stage_segment(name, incoming, upto=upto)
             except Exception as exc:
                 if not self._is_vanished_input(exc):
                     raise
@@ -1800,7 +1941,7 @@ class ManifestParquetSink(MergeSink):
             out = None
             min_row: int | None = None
             for n, seg, c in sorted(live):
-                df = self.spark.read.parquet(seg)
+                df = self._read_parquet([seg])
                 if c is None:
                     df = df.withColumn("_snapshot", F.lit(n).cast("long"))
                     floor = n
@@ -1828,6 +1969,7 @@ class ManifestParquetSink(MergeSink):
                     covers=covers,
                     min_row=min_row,
                     redacted_at=redacted,
+                    upto=self._carry_upto(committed_rows, covers),
                 )
             except Exception as exc:
                 if not self._is_vanished_input(exc):
@@ -2358,7 +2500,7 @@ class ManifestParquetSink(MergeSink):
             out = None
             min_row: int | None = None
             for n, seg, c in sorted(targets):
-                df = self.spark.read.parquet(seg)
+                df = self._read_parquet([seg])
                 if c is None:
                     df = df.withColumn("_snapshot", F.lit(n).cast("long"))
                     floor = n
@@ -2446,6 +2588,7 @@ class ManifestParquetSink(MergeSink):
                     covers=covers,
                     min_row=min_row,
                     redacted_at=redacted,
+                    upto=self._carry_upto(committed_rows, covers),
                 )
             except ValueError:
                 raise  # bad cluster args are caller errors, not races

@@ -28,6 +28,16 @@ def default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+def initial_shuffle_partitions(explicit: int | None, cores: int) -> int:
+    """``explicit``, else ``$SPARK_GRAFT_SHUFFLE_PARTITIONS`` (unset or
+    empty = not given, as for ``$SPARK_GRAFT_CPUS``), else ``cores``."""
+    return (
+        explicit
+        or int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS") or 0)
+        or cores
+    )
+
+
 def get_spark(
     app_name: str = "metro-warehouse-spark",
     shuffle_partitions: int | None = None,
@@ -78,11 +88,7 @@ def get_spark(
         # standard guidance; set it through this parameter.
         .config(
             "spark.sql.shuffle.partitions",
-            str(
-                shuffle_partitions
-                or int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", 0))
-                or cores
-            ),
+            str(initial_shuffle_partitions(shuffle_partitions, cores)),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

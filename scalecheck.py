@@ -916,8 +916,8 @@ def tiered_mode(spark, n_batches: int = 48, batch_rows: int = 2000) -> None:
             staged_bytes = []
             orig = sink._stage_segment
 
-            def wrapped(name, df, covers=None, min_row=None):
-                stage = orig(name, df, covers=covers, min_row=min_row)
+            def wrapped(name, df, covers=None, min_row=None, **kw):
+                stage = orig(name, df, covers=covers, min_row=min_row, **kw)
                 if covers is not None:
                     staged_rows.append(sink._segment_rows(stage))
                     staged_bytes.append(sink._segment_bytes(stage))
@@ -1088,8 +1088,8 @@ def refresh_mode(
 ) -> None:
     """MaintainedAggregate refresh cost vs ACCUMULATED snapshot count
     — the O(new segments) claim: each refresh folds only the
-    since-last-fold diff (one small groupBy) plus a metadata-scale
-    hwm read, so per-refresh cost must stay FLAT as the fact table
+    since-last-fold diff (one small groupBy) plus a manifest-metadata
+    horizon read, so per-refresh cost must stay FLAT as the fact table
     accumulates hundreds of snapshots. Also times the delete-aware
     paths the r13 composition added: a refresh folding a tombstone's
     negative partials (one admissions pass with the keys broadcast),

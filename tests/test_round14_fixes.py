@@ -6,7 +6,7 @@
   to counting) when a compaction overlaps the window.
 - ``MaintainedAggregate.refresh`` over an all-replay window launches
   ZERO Spark jobs (the r13 tree paid an ``isEmpty`` probe per
-  refresh).
+  refresh; the fold horizon is manifest metadata).
 - the k-means / PQ driver-side folds fail loudly past the
   bounded-collect invariant (``KMEANS_MAX_FOLD_CELLS``).
 - one ``sales_fact`` materialization serves both line grains.
@@ -114,13 +114,11 @@ def test_replay_refresh_launches_no_jobs(spark, tmp_path):
     # already the documented no-op case
     assert ma.refresh() is None
     # the metadata fast path: no added_between build, no isEmpty
-    # probe — the only Spark work left is the hwm horizon read (the
-    # r13 path additionally paid the diff-relation isEmpty probe)
+    # probe, and the fold horizon is read from the aggregate's
+    # manifests — no Spark work at all
     njobs = len(tracker.getJobIdsForGroup(grp))
     spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
-    # ≤3: AQE can split the one hwm-horizon read into sub-jobs; the
-    # r13 path paid the diff isEmpty probe on top of this
-    assert njobs <= 3, f"replay refresh launched {njobs} jobs"
+    assert njobs == 0, f"replay refresh launched {njobs} jobs"
     assert {tuple(r) for r in ma.serve().collect()} == served_before
 
 
