@@ -42,13 +42,13 @@ from .streaming.corpus import (
 
 
 class CorpusPipeline:
-    """Batch + streaming corpus curation over one idempotent parquet
-    corpus table (fingerprint-keyed insert-if-absent, same replay
-    semantics as the warehouse fact sink)."""
+    """Batch + streaming corpus curation over one idempotent
+    manifest-backed corpus table (fingerprint-keyed insert-if-absent,
+    same replay semantics as the warehouse fact sink)."""
 
     def __init__(
         self, spark: SparkSession, corpus_root: str,
-        backend: str = "parquet",
+        backend: str = "manifest",
         auto_compact_segments: int | None = None,
     ) -> None:
         self.spark = spark

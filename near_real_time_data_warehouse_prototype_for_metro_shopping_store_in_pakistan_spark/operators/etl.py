@@ -23,11 +23,13 @@ broadcast join (SURVEY §4).
 
 Scale notes: master data (products/customers) broadcasts; the only
 shuffle is the dropDuplicates on the dedup key, which at 100 TB rides
-the same hash partitioning the fact table is written with. The
-parquet, bloom and Delta warehouses write the fact partitioned by
-(year, month) — time-range queries prune by directory; the manifest
-warehouse writes unpartitioned segments with order_date zone maps
-instead (see ``ManifestWarehouse``).
+the same hash partitioning the fact table is written with.
+
+Every table lands through one insert-if-absent sink
+(``operators.sinks``): ``warehouse_for`` builds the star-schema
+warehouse on the manifest backend by default (``ManifestWarehouse`` —
+unpartitioned fact segments with order_date zone maps), or on Delta
+(``DeltaWarehouse`` — fact partitioned by (year, month)).
 """
 
 from __future__ import annotations
@@ -39,11 +41,10 @@ from pyspark.sql import functions as F
 
 from ..functions.time import time_dimension, with_time_attributes
 from .sinks import (
-    BloomedAntiJoinSink,
     DeltaMergeSink,
     ManifestParquetSink,
-    ParquetAntiJoinSink,
-    delta_available,
+    manifest_options,
+    resolve_backend,
 )
 
 # The reference keeps only the first record per Order_ID even though a
@@ -520,22 +521,6 @@ class WarehouseOps:
 
 
 @dataclass
-class ParquetWarehouse(WarehouseOps, ParquetAntiJoinSink):
-    """The star-schema warehouse over the default insert-if-absent
-    parquet backend (= the reference's ``alreadyExists`` + INSERT
-    pattern, src/Meshjoin.java:612-626, as a per-batch left-anti join
-    — see ``operators.sinks`` for the protocol and the transactional
-    Delta alternative)."""
-
-    keys: dict[str, list[str]] = field(
-        default_factory=lambda: dict(WAREHOUSE_KEYS)
-    )
-    partitioning: dict[str, list[str]] = field(
-        default_factory=lambda: dict(WAREHOUSE_PARTITIONING)
-    )
-
-
-@dataclass
 class ManifestWarehouse(WarehouseOps, ManifestParquetSink):
     """The star-schema warehouse over manifest-committed segments:
     crash-atomic batch visibility on plain parquet, no optional
@@ -547,7 +532,7 @@ class ManifestWarehouse(WarehouseOps, ManifestParquetSink):
     tiny file per month per batch) with ``order_date`` zone maps in
     its manifest, so ``scan("sales_fact", {"order_date": (lo, hi)})``
     skips whole segments and files instead of month directories — the
-    layout ``plans.fact_store`` uses. The other backends keep
+    layout ``plans.fact_store`` uses. ``DeltaWarehouse`` keeps
     ``WAREHOUSE_PARTITIONING``."""
 
     keys: dict[str, list[str]] = field(
@@ -555,21 +540,6 @@ class ManifestWarehouse(WarehouseOps, ManifestParquetSink):
     )
     stats_cols: dict[str, list[str]] = field(
         default_factory=lambda: {"sales_fact": ["order_date"]}
-    )
-
-
-@dataclass
-class BloomedWarehouse(WarehouseOps, BloomedAntiJoinSink):
-    """The star-schema warehouse over the Bloom-prefiltered anti-join
-    backend: keys the persisted seen-key Bloom proves novel skip the
-    existing-table scan entirely (see
-    operators.sinks.BloomedAntiJoinSink)."""
-
-    keys: dict[str, list[str]] = field(
-        default_factory=lambda: dict(WAREHOUSE_KEYS)
-    )
-    partitioning: dict[str, list[str]] = field(
-        default_factory=lambda: dict(WAREHOUSE_PARTITIONING)
     )
 
 
@@ -592,55 +562,23 @@ class DeltaWarehouse(WarehouseOps, DeltaMergeSink):
 def warehouse_for(
     spark,
     root: str,
-    backend: str = "parquet",
+    backend: str = "manifest",
     auto_compact_segments: int | None = None,
     sink_kwargs: dict | None = None,
 ):
     """Construct the star-schema warehouse on the requested sink
-    backend: "parquet" (default), "delta", or "auto" (delta when
-    importable). ``auto_compact_segments`` applies the manifest
-    backend's inline segment-compaction policy (rejected for other
-    backends — see operators.sinks.ManifestParquetSink).
-    ``sink_kwargs`` forwards further manifest-only options
-    (``commit_protocol="objectstore"``, ``compact_async=True``,
-    ``tier_factor``, ``stats_cols``, ``allow_schema_evolution``)."""
-    if backend == "auto":
-        backend = "delta" if delta_available() else "parquet"
-    try:
-        cls = {
-            "parquet": ParquetWarehouse,
-            "manifest": ManifestWarehouse,
-            "delta": DeltaWarehouse,
-            "bloom": BloomedWarehouse,
-        }[backend]
-    except KeyError:
-        raise ValueError(
-            f"unknown warehouse backend {backend!r}: expected "
-            "'parquet', 'manifest', 'delta', 'bloom', or 'auto'"
-        ) from None
-    wh = cls(spark, root)
-    if auto_compact_segments is not None:
-        if backend != "manifest":
-            raise ValueError(
-                "auto_compact_segments applies only to the 'manifest' "
-                f"backend (got {backend!r})"
-            )
-        wh.auto_compact_segments = auto_compact_segments
-    if sink_kwargs:
-        if backend != "manifest":
-            raise ValueError(
-                "sink_kwargs applies only to the 'manifest' backend "
-                f"(got {backend!r})"
-            )
-        for k, v in sink_kwargs.items():
-            if k == "commit_protocol" and v not in (
-                "rename", "objectstore",
-            ):
-                raise ValueError(
-                    f"unknown commit_protocol {v!r}: expected "
-                    "'rename' or 'objectstore'"
-                )
-            if not hasattr(wh, k):
-                raise ValueError(f"unknown sink option {k!r}")
-            setattr(wh, k, v)
-    return wh
+    backend: "manifest" (default), "delta", or "auto" (delta when
+    importable, else manifest). ``auto_compact_segments`` and
+    ``sink_kwargs`` are manifest-only options
+    (``operators.sinks.MANIFEST_OPTIONS``, e.g.
+    ``commit_protocol="objectstore"``, ``compact_async=True``,
+    ``tier_factor``, ``stats_cols``, ``allow_schema_evolution``),
+    validated by ``operators.sinks.manifest_options`` exactly as
+    ``make_sink`` validates them."""
+    backend = resolve_backend(backend)
+    options = manifest_options(
+        backend,
+        {"auto_compact_segments": auto_compact_segments, **(sink_kwargs or {})},
+    )
+    cls = ManifestWarehouse if backend == "manifest" else DeltaWarehouse
+    return cls(spark, root, **options)

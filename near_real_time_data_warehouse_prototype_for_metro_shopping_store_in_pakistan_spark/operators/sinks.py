@@ -1,7 +1,7 @@
 """Pluggable transactional insert-if-absent sinks.
 
 Every idempotent table in the engine — the star-schema warehouse
-(``operators.etl.ParquetWarehouse``), the curated corpus
+(``operators.etl.ManifestWarehouse``), the curated corpus
 (``streaming.corpus``), and the streaming IVF index
 (``streaming.ann_index``) — shares ONE protocol: *insert each incoming
 row unless a row with its key already exists*. That protocol is the
@@ -9,17 +9,11 @@ Spark re-expression of the reference's per-row ``alreadyExists`` +
 INSERT pattern (src/Meshjoin.java:612-626), and it is what makes
 at-least-once streaming replays no-ops.
 
-Two physical backends implement it:
+Two physical backends implement it (``BACKENDS``):
 
-- ``ParquetAntiJoinSink`` (default): plain parquet + a per-batch
-  left-anti join against the existing keys, partition-pruned to only
-  the hive partitions the batch touches. Crash-safe for at-least-once
-  SINGLE-WRITER upstreams (a replayed batch is filtered by key);
-  concurrent writers could race between the anti-join read and the
-  append — exactly the caveat the reference shares with its single
-  consumer thread.
-- ``ManifestParquetSink``: plain parquet with CRASH-ATOMIC visibility
-  AND optimistic concurrency — each batch is staged as an immutable
+- ``ManifestParquetSink`` (``"manifest"``, the default of every
+  constructor): plain parquet with CRASH-ATOMIC visibility AND
+  optimistic concurrency — each batch is staged as an immutable
   segment directory and published by one atomic exclusive rename to
   its segment number; two concurrent writers serialize without a
   coordinator (the loser re-reads the now-visible segments, re-runs
@@ -27,24 +21,20 @@ Two physical backends implement it:
   batch is an invisible orphan instead of a half-visible table. No
   optional dependency, so the transactional commit semantics are
   tested in every environment.
-- ``DeltaMergeSink``: the same contract as one atomic
+- ``DeltaMergeSink`` (``"delta"``): the same contract as one atomic
   ``MERGE ... WHEN NOT MATCHED THEN INSERT`` per batch against a
-  Delta table — the transactional form that stays correct under
-  concurrent writers and readers (optimistic concurrency at the
-  table log). Env-gated on the ``delta`` package (like the PIL image
+  Delta table. Env-gated on the ``delta`` package (like the PIL image
   path): constructing it without ``delta-spark`` installed raises
-  ``ImportError`` with the contract, and tests for it are
-  skip-marked where the package is absent.
+  ``ImportError``, and tests for it are skip-marked where the package
+  is absent. ``"auto"`` picks it when importable.
 
-Both backends expose the same three methods (``path``, ``read``,
-``insert_if_absent``), so every façade takes a ``backend=`` switch and
-the streaming/replay semantics are backend-independent (asserted by
-the shared contract tests in tests/test_sinks.py).
-
-At 100 TB the MERGE backend is the one to deploy: the anti-join sink's
-read-then-append is two operations, while Delta/Iceberg commit the
-key-join and the file additions as one log entry, and their MERGE
-pushes the same partition pruning this module does by hand.
+Both backends expose the same methods (``path``, ``read``,
+``insert_if_absent``, ``delete_keys``), so every façade takes a
+``backend=`` switch and the streaming/replay semantics are
+backend-independent (asserted by the shared contract tests in
+tests/test_sinks.py). The snapshot surface (time travel, diffs,
+compaction, tombstones, zone maps) is manifest-only; its options are
+validated by backend name in ``manifest_options``.
 """
 
 from __future__ import annotations
@@ -114,9 +104,8 @@ class MergeSink:
     """Shared shape of a keyed insert-if-absent table store.
 
     ``keys`` maps table name -> dedup key columns; ``partitioning``
-    maps table name -> hive partition columns (used for directory
-    pruning by the parquet backend and passed to ``partitionBy`` on
-    first write by both).
+    maps table name -> hive partition columns (passed to
+    ``partitionBy`` on write).
     """
 
     spark: SparkSession
@@ -168,206 +157,13 @@ class MergeSink:
 
 
 @dataclass
-class ParquetAntiJoinSink(MergeSink):
-    """Idempotent insert-if-absent parquet sink (= the reference's
-    ``alreadyExists`` + INSERT pattern, src/Meshjoin.java:612-626, as a
-    per-batch left-anti join).
-
-    Plain-parquet caveat (SURVEY §7): append-only with key-anti-join is
-    crash-safe for at-least-once upstreams because replayed rows are
-    filtered; concurrent writers would need a transactional table
-    format (= ``DeltaMergeSink``) — single-writer here, like the
-    reference's single consumer thread.
-    """
-
-    def _recover_swap(self, name: str, gc: bool = True) -> None:
-        """Crash recovery for ``delete_keys``' two-rename directory
-        swap: a crash BETWEEN the renames leaves no table directory
-        at all — the whole table stranded in a complete ``_old_*``
-        sibling (and the delete's survivors in ``_rewrite_*``), which
-        nothing else ever garbage-collects. Without recovery the next
-        ``insert_if_absent`` would silently re-create an EMPTY table —
-        data loss, not just lost atomicity. Restore the newest
-        ``_old_*`` as the table (the interrupted delete is simply
-        lost; deletes are replayable no-ops, so re-running it is
-        always safe), then — write paths only (``gc``) — remove the
-        remaining orphan siblings. Single-writer like every other
-        mutation on this backend."""
-        import glob
-        import shutil
-
-        path = self.path(name)
-        olds = sorted(glob.glob(f"{path}_old_*"), key=os.path.getmtime)
-        if olds and not os.path.exists(path):
-            os.rename(olds.pop(), path)
-        if gc and os.path.exists(path):
-            for d in olds + glob.glob(f"{path}_rewrite_*"):
-                shutil.rmtree(d, ignore_errors=True)
-
-    def read(self, name: str) -> DataFrame | None:
-        self._recover_swap(name, gc=False)
-        p = self.path(name)
-        try:
-            return self.spark.read.parquet(p)
-        except Exception:
-            return None
-
-    def _scoped_existing(
-        self, name: str, incoming: DataFrame, existing: DataFrame
-    ) -> DataFrame:
-        """``existing`` scoped to only the hive partitions the
-        incoming batch touches (see ``_existing_keys``); the whole
-        table when unpartitioned."""
-        parts = self.partitioning.get(name)
-        if parts and set(parts) <= set(incoming.columns):
-            touched = incoming.select(*parts).distinct().collect()
-            pred = F.lit(False)
-            for row in touched:
-                clause = F.lit(True)
-                for p in parts:
-                    # null-safe: a plain == is never true against a
-                    # NULL partition value, which would EXCLUDE the
-                    # null partition from the "seen" scan and re-admit
-                    # replayed NULL-partition rows — defeating the
-                    # eqNullSafe key join below
-                    clause = clause & F.col(p).eqNullSafe(F.lit(row[p]))
-                pred = pred | clause
-            existing = existing.filter(pred)
-        return existing
-
-    def _existing_keys(
-        self, name: str, incoming: DataFrame, existing: DataFrame
-    ) -> DataFrame:
-        """Key column(s) of already-written rows, scoped to only the
-        hive partitions the incoming batch touches.
-
-        Without the scope, every micro-batch anti-joins against the
-        ENTIRE accumulated table's keys — O(batches × fact-keys) total
-        work, a smaller cousin of the reference's quadratic rescan
-        (src/Meshjoin.java:612-626). Instead: collect the batch's
-        distinct partition tuples (metadata-scale — a micro-batch
-        touches a handful of (year, month) partitions) and turn them
-        into static ``PartitionFilters`` on the existing-side parquet
-        scan, so the anti-join reads only those directories.
-
-        Correctness requires the dedup key to determine the partition
-        values — true for this schema (``order_id`` fixes
-        ``order_date`` hence (year, month)), and trivially true for
-        at-least-once replay, where duplicate rows are bit-identical
-        and land in the same partition.
-        """
-        key = self.keys[name]
-        existing = self._scoped_existing(name, incoming, existing)
-        return existing.select(*key).dropDuplicates(key)
-
-    def insert_if_absent(self, name: str, batch: DataFrame) -> None:
-        self._recover_swap(name)
-        key = self.keys[name]
-        incoming = batch.dropDuplicates(key)
-        existing = self.read(name)
-        parts = self.partitioning.get(name)
-        # The partition-tuple pre-pass computes the batch once before
-        # the write does — persist across the two passes so the ETL
-        # join pipeline isn't re-derived.
-        pinned = incoming if parts is not None and existing is not None else None
-        if pinned is not None:
-            incoming = pinned.persist()
-        try:
-            if existing is not None:
-                # null-safe (<=>) anti-join so a NULL-keyed row, once
-                # admitted, is treated as existing on replay — the
-                # same semantics the MERGE backend's <=> condition has
-                # (a plain equality join would never match NULL and
-                # re-insert it every replay)
-                seen = self._existing_keys(name, incoming, existing)
-                seen = seen.select(
-                    *[F.col(k).alias(f"__seen_{k}") for k in key]
-                )
-                cond = F.lit(True)
-                for k in key:
-                    cond = cond & F.col(k).eqNullSafe(F.col(f"__seen_{k}"))
-                incoming = incoming.join(seen, cond, "left_anti")
-                # align column order for parquet append
-                incoming = incoming.select(*existing.columns)
-            writer = incoming.write.mode("append")
-            if parts:
-                writer = writer.partitionBy(*parts)
-            writer.parquet(self.path(name))
-        finally:
-            if pinned is not None:
-                pinned.unpersist()
-
-    def delete_keys(
-        self, name: str, keys_df: DataFrame, on: list[str] | None = None
-    ) -> bool:
-        """Key-targeted delete (takedown / right-to-be-forgotten) for
-        the plain-parquet backend: rewrite the table WITHOUT the rows
-        matching ``keys_df`` on the ``on`` columns (default: the
-        table's dedup key; any column subset works — a claim table
-        keyed on (band, owner) deletes by owner alone).
-
-        Physical form: materialize the surviving rows into a staging
-        directory FIRST (the write reads the old files, so nothing is
-        deleted under the plan), then swap directories with two
-        renames. The window between the renames is this backend's
-        documented single-writer crash hole (the reference shares it:
-        a MySQL DELETE without a transactional engine): a crash there
-        leaves NO table directory — the data stranded in ``_old_*``
-        (the whole pre-delete table) and ``_rewrite_*`` (the
-        survivors) siblings. ``_recover_swap`` (run at the start of
-        every read/insert/delete) restores the ``_old_*`` copy as the
-        table and GCs the orphans, so the consequence is a LOST
-        (replayable) delete, never a lost table. Deployments needing
-        a crash-atomic, OCC-safe delete use the manifest backend's
-        ``delete_keys``, which commits the rewrite as a covering
-        snapshot. After a delete the key is genuinely
-        FORGOTTEN: a later insert_if_absent of the same key re-admits
-        it (takedown semantics, same trade ``compact(expire_below=)``
-        documents). The Bloomed subclass inherits this unchanged — its
-        filter stays a SUPERSET of the admitted keys (deleted keys
-        still flag "maybe seen" and pay only the exact check, which
-        now finds nothing), so correctness is unaffected.
-
-        Returns True when rows were deleted, False when the table is
-        absent or no row matched (a replayed delete is a no-op).
-        """
-        import shutil
-        import uuid
-
-        self._recover_swap(name)
-        on = list(on or self.keys[name])
-        existing = self.read(name)
-        if existing is None:
-            return False
-        seen, cond = self._delete_match(keys_df, on)
-        if existing.join(seen, cond, "left_semi").isEmpty():
-            return False
-        remaining = existing.join(seen, cond, "left_anti")
-        path = self.path(name)
-        tmp = f"{path}_rewrite_{uuid.uuid4().hex[:12]}"
-        writer = remaining.write.mode("error")
-        parts = self.partitioning.get(name)
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(tmp)  # materialized before the source moves
-        old = f"{path}_old_{uuid.uuid4().hex[:12]}"
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old, ignore_errors=True)
-        return True
-
-
-@dataclass
 class DeltaMergeSink(MergeSink):
     """Insert-if-absent as one atomic Delta ``MERGE`` per batch.
 
-    Same contract as ``ParquetAntiJoinSink`` — first writer of a key
-    wins, replays are no-ops — but the key-match and the file commit
-    are a single transaction in the Delta log, so the sink stays
-    correct under concurrent writers and readers (the anti-join sink's
-    read-then-append window disappears). Delta's MERGE also performs
-    the partition/file pruning this repo's parquet sink implements by
-    hand (its metadata keeps per-file key min/max).
+    Same contract as ``ManifestParquetSink`` — first writer of a key
+    wins, replays are no-ops — with the key-match and the file commit
+    as a single transaction in the Delta log. Delta's MERGE also
+    prunes files by the per-file key min/max its log keeps.
 
     Requires the optional ``delta-spark`` package AND a session built
     with the Delta SQL extension + catalog (see
@@ -382,8 +178,9 @@ class DeltaMergeSink(MergeSink):
                 "DeltaMergeSink requires the optional 'delta-spark' "
                 "package (pip install delta-spark) and a SparkSession "
                 "configured with the Delta extension/catalog; use the "
-                "default ParquetAntiJoinSink otherwise — same "
-                "insert-if-absent contract, single-writer only"
+                "default 'manifest' backend (ManifestParquetSink) "
+                "otherwise — same insert-if-absent contract, with "
+                "crash-atomic optimistic-concurrency commits"
             )
 
     def read(self, name: str) -> DataFrame | None:
@@ -406,8 +203,8 @@ class DeltaMergeSink(MergeSink):
             writer.save(path)
             return
         target = DeltaTable.forPath(self.spark, path)
-        # <=> so NULL key components behave like the anti-join backend
-        # (SQL null-safe equality, not three-valued =)
+        # <=> so NULL key components behave like the manifest
+        # backend's anti-join (SQL null-safe equality, not three-valued =)
         cond = " AND ".join(f"t.{k} <=> s.{k}" for k in key)
         (
             target.alias("t")
@@ -468,10 +265,10 @@ class ManifestParquetSink(MergeSink):
     existing ``seg_<n>`` (POSIX rename onto a non-empty directory
     fails), so exactly one writer wins each number. Readers union ONLY
     published segments, so a crash mid-write leaves an invisible
-    staging orphan, never a half-visible table — closing the
-    plain-append sink's one crash hole (a batch that died between
-    writing some part-files and finishing could leak partial rows into
-    the next read's anti-join AND into queries).
+    staging orphan, never a half-visible table (a plain parquet
+    append that dies between writing some part-files and finishing
+    leaks partial rows into the next read's anti-join AND into
+    queries).
 
     OPTIMISTIC CONCURRENCY across writers: a writer anti-joins against
     the segments visible at its read, then attempts to publish at
@@ -2263,12 +2060,11 @@ class ManifestParquetSink(MergeSink):
     def _gc_superseded(self, name: str) -> None:
         """Delete on-disk segments superseded by a committed covering
         manifest (data dirs, plus commit objects on the objectstore
-        protocol). Runs at the START of the next batch / compaction
-        (the bloom sink's deferred-GC discipline), never inside the
-        compaction that superseded them — so a lazy reader plan built
-        BEFORE a ``delete_covered=False`` compaction keeps its files
-        until the single writer moves again, instead of failing
-        recompute mid-collect."""
+        protocol). Runs at the START of the next batch / compaction,
+        never inside the compaction that superseded them — so a lazy
+        reader plan built BEFORE a ``delete_covered=False`` compaction
+        keeps its files until the single writer moves again, instead
+        of failing recompute mid-collect."""
         committed, _ = self._list_committed(name)
         covered: set[int] = set()
         for _, _, meta in committed:
@@ -2660,229 +2456,24 @@ def delta_session_builder_conf() -> dict[str, str]:
     }
 
 
-@dataclass
-class BloomedAntiJoinSink(ParquetAntiJoinSink):
-    """Anti-join sink with a persisted seen-key Bloom filter
-    (operators/bloom.py): keys the filter PROVES novel bypass the
-    seen-scan + anti-join entirely; only the "maybe seen" residue
-    (replays + false positives) pays for the partition-pruned exact
-    check — and that check broadcasts the fpp-bounded suspect keys
-    against ONE column-pruned scan (semi-join, then a broadcast
-    anti-join), so the accumulated key relation is never shuffled or
-    deduplicated.
-
-    STATUS — measured and DORMANT (SCALE.md "round 8 … verdict"):
-    in the deliberately constructed win regime (64-char
-    unpartitionable keys, 2M-12M pre-seeded accumulation), the plain
-    anti-join backend beats this one at every level once the table
-    sits in page cache — which it always does in-container. The
-    per-batch floor here is filter maintenance (merge+write of the
-    full word relation, O(filter) not O(batch)) plus k
-    broadcast-membership joins (Catalyst builds k separate broadcast
-    exchanges; measured, no reuse). The one measured inversion is the
-    COLD-cache sub-regime (8M seed, cold: anti-join 12.9/13.7 s vs
-    bloom 9.0/8.0 s) — the regime a 100 TB table actually lives in
-    (seen scan storage-bound, ~64 B/key read+shuffle vs ~1.25 B/key
-    of filter) — so the backend stays available, correctness-proven
-    by the shared contract suite, for storage-bound unpartitionable
-    key spaces; parquet stays the default everywhere else.
-
-    Crash-safety ordering invariant: the Bloom is always written
-    BEFORE the data append and is therefore a SUPERSET of the admitted
-    keys under any crash point. A superset only costs extra exact
-    checks; the reverse order could mark admitted keys novel on replay
-    and double-insert. Bloom versions are immutable directories
-    (``_bloom/<table>/v<N>``): a batch writes v<N+1> while v<N> is
-    still being read (no overwrite-under-read), readers take the
-    newest version whose ``_SUCCESS`` marker exists, and a table with
-    no readable version rebuilds the filter from its keys (one-time
-    scan). Stale versions are garbage-collected at the START of the
-    next batch, never mid-batch, so every lazy plan of the current
-    batch (``flagged``/``admitted`` still reference the pre-merge
-    version until the data append materializes them) keeps its files
-    for the batch's whole lifetime even under recompute.
-
-    Saturation self-heals: past ~10 bits/key the filter stops proving
-    novelty (everything flags "maybe seen" — still correct, just the
-    plain anti-join plus overhead), so the sink rebuilds it from the
-    table's keys at 2× headroom. Growth is geometric, so the rebuild
-    scans amortize to O(1) per key over the table's life;
-    ``bloom_bits`` is only the STARTING size.
-    """
-
-    bloom_bits: int = 1 << 20
-    bloom_k: int = 5
-
-    def _bloom_dir(self, name: str) -> str:
-        return os.path.join(self.root, "_bloom", name)
-
-    def _bloom_versions(self, name: str) -> list[int]:
-        """Committed (=_SUCCESS-marked) version numbers, ascending."""
-        d = self._bloom_dir(name)
-        try:
-            entries = os.listdir(d)
-        except OSError:
-            return []
-        out = []
-        for e in entries:
-            if e.startswith("v") and e[1:].isdigit() and os.path.exists(
-                os.path.join(d, e, "_SUCCESS")
-            ):
-                out.append(int(e[1:]))
-        return sorted(out)
-
-    def _read_bloom(self, name: str):
-        """Newest committed bloom version as a (lazy) DataFrame, or
-        None when no readable version exists."""
-        vs = self._bloom_versions(name)
-        if not vs:
-            return None
-        try:
-            return self.spark.read.parquet(
-                os.path.join(self._bloom_dir(name), f"v{vs[-1]}")
-            )
-        except Exception:
-            return None
-
-    def _write_bloom(self, name: str, bloom_df) -> None:
-        """Commit ``bloom_df`` as the next immutable version. Older
-        versions are NOT deleted here: lazy plans built earlier in the
-        SAME batch (``flagged``/``admitted``) still reference the
-        previous version's parquet files, and the superset-safe write
-        order materializes them only at the final data append — a
-        recompute (shuffle-block loss, cache eviction, an unbroadcast
-        auto-grown filter) after an eager delete would scan removed
-        files and fail the batch. Stale versions are garbage-collected
-        at the START of the next batch (``_gc_stale_blooms``), when no
-        plan can reference them (single-writer invariant)."""
-        vs = self._bloom_versions(name)
-        nxt = (vs[-1] + 1) if vs else 0
-        d = self._bloom_dir(name)
-        bloom_df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(d, f"v{nxt}")
-        )
-
-    def _gc_stale_blooms(self, name: str) -> None:
-        """Drop every committed bloom version except the newest.
-        Runs before a batch touches the filter, so the only plans that
-        could reference a stale version belong to ALREADY-COMPLETED
-        batches (their appends materialized before they returned)."""
-        import shutil
-
-        vs = self._bloom_versions(name)
-        d = self._bloom_dir(name)
-        for v in vs[:-1]:
-            shutil.rmtree(os.path.join(d, f"v{v}"), ignore_errors=True)
-
-    def insert_if_absent(self, name: str, batch: DataFrame) -> None:
-        from .bloom import (
-            bloom_meta,
-            bloom_words,
-            merge_blooms,
-            with_maybe_seen,
-        )
-
-        key = self.keys[name]
-        parts = self.partitioning.get(name)
-        self._gc_stale_blooms(name)
-        incoming = batch.dropDuplicates(key).persist()
-        flagged = None
-        try:
-            existing = self.read(name)
-            if existing is None:
-                self._write_bloom(
-                    name,
-                    bloom_words(incoming, key, self.bloom_bits, self.bloom_k),
-                )
-                admitted = incoming
-            else:
-                bloom = self._read_bloom(name)
-                if bloom is None:
-                    # pre-bloom table or crashed version dir: rebuild
-                    # from the table's keys (one-time full key scan)
-                    self._write_bloom(
-                        name,
-                        bloom_words(
-                            existing, key, self.bloom_bits, self.bloom_k
-                        ),
-                    )
-                    bloom = self._read_bloom(name)
-                m_bits, k_probes, n_keys = bloom_meta(bloom)
-                if n_keys * 10 > m_bits:
-                    # saturation auto-growth: past ~10 bits/key the
-                    # fpp climbs and the filter stops proving novelty
-                    # — rebuild from the table's keys at 2× headroom
-                    # (geometric, so rebuild scans amortize to O(1)
-                    # per key over the table's life)
-                    m_bits = 1 << (n_keys * 20).bit_length()
-                    self._write_bloom(
-                        name,
-                        bloom_words(existing, key, m_bits, k_probes),
-                    )
-                    bloom = self._read_bloom(name)
-                # the batch bloom MUST share the live filter's shape
-                # (not the constructor default) or the merge below
-                # would reject it after any growth rebuild
-                batch_bloom = bloom_words(incoming, key, m_bits, k_probes)
-                flagged = with_maybe_seen(incoming, key, bloom).persist()
-                novel = flagged.filter(~F.col("maybe_seen")).drop(
-                    "maybe_seen"
-                )
-                suspect = flagged.filter(F.col("maybe_seen")).drop(
-                    "maybe_seen"
-                )
-                if suspect.isEmpty():
-                    admitted = novel
-                else:
-                    # The suspect side is fpp-bounded by construction
-                    # (replays + false positives, never the whole
-                    # batch unless the filter is saturated), so invert
-                    # the exact check around that asymmetry: ONE
-                    # column-pruned, partition-scoped scan of the
-                    # existing keys, BROADCAST-semi-joined against the
-                    # suspect keys, yields the (tiny) actually-seen
-                    # set; suspects then anti-join against THAT, also
-                    # broadcast. The accumulated key relation is never
-                    # shuffled or deduplicated — unlike the plain
-                    # backend, whose probe side (the whole batch) is
-                    # unbounded and therefore pays dropDuplicates +
-                    # sort-merge over the full seen set every batch.
-                    skeys = suspect.select(*key).dropDuplicates(key)
-                    scoped = self._scoped_existing(
-                        name, suspect, existing
-                    ).select(*[F.col(k).alias(f"__seen_{k}") for k in key])
-                    cond = F.lit(True)
-                    for k in key:
-                        cond = cond & F.col(k).eqNullSafe(
-                            F.col(f"__seen_{k}")
-                        )
-                    matched = scoped.join(
-                        F.broadcast(skeys), cond, "left_semi"
-                    )
-                    admitted = novel.unionByName(
-                        suspect.join(
-                            F.broadcast(matched), cond, "left_anti"
-                        )
-                    )
-                admitted = admitted.select(*existing.columns)
-                # superset-safe order: bloom BEFORE data
-                self._write_bloom(name, merge_blooms(bloom, batch_bloom))
-            writer = admitted.write.mode("append")
-            if parts:
-                writer = writer.partitionBy(*parts)
-            writer.parquet(self.path(name))
-        finally:
-            incoming.unpersist()
-            if flagged is not None:
-                flagged.unpersist()
-
-
 BACKENDS = {
-    "parquet": ParquetAntiJoinSink,
     "manifest": ManifestParquetSink,
     "delta": DeltaMergeSink,
-    "bloom": BloomedAntiJoinSink,
 }
+
+# The ``ManifestParquetSink`` settings ``make_sink``/``warehouse_for``
+# accept as options; no other backend has them.
+MANIFEST_OPTIONS = (
+    "auto_compact_segments",
+    "stats_cols",
+    "allow_schema_evolution",
+    "commit_protocol",
+    "compact_async",
+    "tier_factor",
+    "metrics_path",
+    "compact_error_limit",
+    "materialize_tombstones_after",
+)
 
 # Default live-segment bound for streaming facades that auto-compact:
 # read cost stays O(8) directories at any micro-batch cadence, while
@@ -2892,18 +2483,63 @@ BACKENDS = {
 AUTO_COMPACT_DEFAULT = 8
 
 
+def resolve_backend(backend: str) -> str:
+    """The concrete backend name for ``backend``: ``"auto"`` is delta
+    when ``delta-spark`` is importable and manifest otherwise; an
+    unknown name raises ``ValueError`` listing the valid choices."""
+    if backend == "auto":
+        return "delta" if delta_available() else "manifest"
+    if backend not in BACKENDS:
+        raise ValueError(
+            f"unknown sink backend {backend!r}: expected one of "
+            f"{sorted(BACKENDS)} or 'auto'"
+        )
+    return backend
+
+
+def manifest_options(backend: str, options: dict) -> dict:
+    """Validate manifest-only sink options against the backend NAME,
+    before any sink is constructed, and return the ones that are set
+    (None and False mean "not set"). Rejects names that are not in
+    ``MANIFEST_OPTIONS``, any set option on a backend other than
+    ``"manifest"``, and an unknown ``commit_protocol``."""
+    unknown = sorted(set(options) - set(MANIFEST_OPTIONS))
+    if unknown:
+        raise ValueError(
+            f"unknown sink option(s) {unknown}: expected some of "
+            f"{list(MANIFEST_OPTIONS)}"
+        )
+    given = {
+        k: v for k, v in options.items() if v is not None and v is not False
+    }
+    if given and backend != "manifest":
+        raise ValueError(
+            f"{sorted(given)} apply only to the 'manifest' backend "
+            "(segment commits, compaction, zone maps, schema "
+            f"evolution); got {backend!r}"
+        )
+    protocol = given.get("commit_protocol")
+    if protocol is not None and protocol not in ("rename", "objectstore"):
+        raise ValueError(
+            f"unknown commit_protocol {protocol!r}: expected "
+            "'rename' or 'objectstore'"
+        )
+    return given
+
+
 def resolve_auto_compact(
     backend: str, value: int | None | str
 ) -> int | None:
     """Resolve a facade's ``auto_compact_segments="auto"`` sentinel:
     the manifest backend gets ``AUTO_COMPACT_DEFAULT`` (bounded
-    segment growth is the right default at micro-batch cadence), every
-    other backend gets None (no segment accumulation exists there).
-    An explicit int/None passes through — including the mismatch case,
-    which ``make_sink`` rejects loudly rather than silently ignoring.
+    segment growth is the right default at micro-batch cadence), delta
+    gets None (no segment accumulation exists there). An explicit
+    int/None passes through — including the mismatch case, which
+    ``make_sink`` rejects loudly rather than silently ignoring.
     """
     if value == "auto":
-        return AUTO_COMPACT_DEFAULT if backend == "manifest" else None
+        manifest = resolve_backend(backend) == "manifest"
+        return AUTO_COMPACT_DEFAULT if manifest else None
     return value  # type: ignore[return-value]
 
 
@@ -2912,10 +2548,9 @@ def read_table(
 ) -> DataFrame | None:
     """Read one table of a sink warehouse without knowing its key or
     partition configuration — the reader-side convenience for
-    consuming a streaming facade's output (reads never touch keys).
-    Default backend matches the streaming facades' manifest default;
-    pass ``"parquet"`` for tables written by the plain backend."""
-    return BACKENDS[backend](spark, root).read(name)
+    consuming a facade's or warehouse's output (reads never touch
+    keys). The default backend is the one every writer defaults to."""
+    return BACKENDS[resolve_backend(backend)](spark, root).read(name)
 
 
 def make_sink(
@@ -2923,7 +2558,7 @@ def make_sink(
     root: str,
     keys: dict[str, list[str]],
     partitioning: dict[str, list[str]] | None = None,
-    backend: str = "parquet",
+    backend: str = "manifest",
     auto_compact_segments: int | None = None,
     stats_cols: dict[str, list[str]] | None = None,
     allow_schema_evolution: bool = False,
@@ -2936,80 +2571,36 @@ def make_sink(
 ) -> MergeSink:
     """Construct the requested sink backend.
 
-    ``backend``: ``"parquet"`` (default — works everywhere,
-    single-writer), ``"manifest"`` (crash-atomic segment commits with
-    optimistic concurrency across writers, works everywhere),
-    ``"delta"`` (transactional MERGE, requires delta-spark), or
-    ``"auto"`` (delta when importable, else parquet).
+    ``backend``: ``"manifest"`` (default — crash-atomic segment
+    commits with optimistic concurrency across writers, works
+    everywhere), ``"delta"`` (transactional MERGE, requires
+    delta-spark), or ``"auto"`` (delta when importable, else
+    manifest).
 
-    ``auto_compact_segments`` applies the manifest backend's inline
-    compaction policy (live segment count bound — see
-    ``ManifestParquetSink.auto_compact_segments``); rejected for any
-    other backend, where segment accumulation does not exist.
-
-    ``stats_cols`` (manifest backend only, same rejection rule)
-    enables zone maps: table name -> columns whose per-segment
-    [min, max] is harvested from parquet footers at commit and used
-    by ``scan(name, ranges)`` to skip provably-disjoint segments.
-
-    ``commit_protocol`` ("rename" | "objectstore"), ``compact_async``
-    and ``tier_factor`` are manifest-only too: the commit-primitive
-    seam, background auto-compaction, and the size-tiered merge ratio
-    (see ``ManifestParquetSink``).
+    Every other argument is a manifest-only option (see
+    ``ManifestParquetSink``), validated by ``manifest_options`` and
+    rejected on delta: ``auto_compact_segments`` (inline compaction
+    at a live-segment bound), ``stats_cols`` (per-segment zone maps
+    used by ``scan``), ``allow_schema_evolution``,
+    ``commit_protocol`` ("rename" | "objectstore"), ``compact_async``,
+    ``tier_factor``, ``metrics_path``, ``compact_error_limit`` and
+    ``materialize_tombstones_after``.
     """
-    if backend == "auto":
-        backend = "delta" if delta_available() else "parquet"
-    try:
-        cls = BACKENDS[backend]
-    except KeyError:
-        raise ValueError(
-            f"unknown sink backend {backend!r}: expected one of "
-            f"{sorted(BACKENDS)} or 'auto'"
-        ) from None
-    sink = cls(spark, root, keys=keys, partitioning=partitioning or {})
-    if auto_compact_segments is not None:
-        if not isinstance(sink, ManifestParquetSink):
-            raise ValueError(
-                "auto_compact_segments applies only to the 'manifest' "
-                f"backend (got {backend!r})"
-            )
-        sink.auto_compact_segments = auto_compact_segments
-    if stats_cols:
-        if not isinstance(sink, ManifestParquetSink):
-            raise ValueError(
-                "stats_cols (zone maps) applies only to the 'manifest' "
-                f"backend (got {backend!r})"
-            )
-        sink.stats_cols = dict(stats_cols)
-    if allow_schema_evolution:
-        if not isinstance(sink, ManifestParquetSink):
-            raise ValueError(
-                "allow_schema_evolution applies only to the 'manifest' "
-                f"backend (got {backend!r})"
-            )
-        sink.allow_schema_evolution = True
-    for label, value in (
-        ("commit_protocol", commit_protocol),
-        ("compact_async", compact_async or None),
-        ("tier_factor", tier_factor),
-        ("metrics_path", metrics_path),
-        ("compact_error_limit", compact_error_limit),
-        ("materialize_tombstones_after", materialize_tombstones_after),
-    ):
-        if value is None:
-            continue
-        if not isinstance(sink, ManifestParquetSink):
-            raise ValueError(
-                f"{label} applies only to the 'manifest' backend "
-                f"(got {backend!r})"
-            )
-        if label == "commit_protocol" and value not in (
-            "rename",
-            "objectstore",
-        ):
-            raise ValueError(
-                f"unknown commit_protocol {value!r}: expected "
-                "'rename' or 'objectstore'"
-            )
-        setattr(sink, label, value)
-    return sink
+    backend = resolve_backend(backend)
+    options = manifest_options(
+        backend,
+        {
+            "auto_compact_segments": auto_compact_segments,
+            "stats_cols": dict(stats_cols) if stats_cols else None,
+            "allow_schema_evolution": allow_schema_evolution,
+            "commit_protocol": commit_protocol,
+            "compact_async": compact_async,
+            "tier_factor": tier_factor,
+            "metrics_path": metrics_path,
+            "compact_error_limit": compact_error_limit,
+            "materialize_tombstones_after": materialize_tombstones_after,
+        },
+    )
+    return BACKENDS[backend](
+        spark, root, keys=keys, partitioning=partitioning or {}, **options
+    )

@@ -36,12 +36,12 @@ from .streaming.pipeline import stream_etl
 
 
 class MetroWarehouse:
-    """Batch + streaming ETL over one idempotent warehouse (sink
-    backend pluggable — operators.sinks)."""
+    """Batch + streaming ETL over one idempotent warehouse (the
+    manifest sink backend by default, or delta — operators.sinks)."""
 
     def __init__(
         self, spark: SparkSession, warehouse_root: str,
-        backend: str = "parquet",
+        backend: str = "manifest",
     ) -> None:
         self.spark = spark
         self.backend = backend

@@ -14,8 +14,10 @@ process — runs ``SELECT ... FROM metro.store_quarterly_sales``
 without re-deriving anything.
 
 Scale notes: the fact table is written partitioned by (year, month) —
-the same layout ``operators.etl.ParquetWarehouse`` uses — so
-catalog-table scans partition-prune exactly like path-based reads.
+the same layout ``operators.etl.DeltaWarehouse`` uses — so
+catalog-table scans partition-prune exactly like path-based reads of
+a Delta warehouse (the manifest warehouse prunes by order_date zone
+maps instead).
 """
 
 from __future__ import annotations

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.etl import DEFAULT_FACT_KEY, warehouse_for
-from ..operators.sinks import resolve_auto_compact
+from ..operators.sinks import resolve_auto_compact, resolve_backend
 from ..sources.csv_inputs import TRANSACTIONS_SCHEMA
 from ..functions.time import ORDER_DATE_FORMAT
 
@@ -98,12 +98,10 @@ def stream_etl(
     like the reference's ``while(true)`` consumer loop
     (src/Meshjoin.java:144-168). ``backend`` selects the
     insert-if-absent sink implementation (operators.sinks); the
-    DEFAULT is the manifest backend with inline auto-compaction
-    (``"auto"`` = 8 live segments) — at micro-batch cadence the plain
-    parquet backend's per-batch file growth is unbounded, so
-    crash-atomic bounded-segment commits are the right default for
-    every foreachBatch facade, while plain parquet remains the batch-
-    warehouse default (operators.etl.warehouse_for).
+    default is the manifest backend — the same default as the batch
+    warehouse (operators.etl.warehouse_for) — with inline
+    auto-compaction (``"auto"`` = 8 live segments), so the segment
+    count stays bounded at any micro-batch cadence.
 
     ``maintain_quarterly_agg`` (manifest backend only) folds each
     batch's admitted fact rows into the incrementally-maintained
@@ -112,17 +110,18 @@ def stream_etl(
     path ``quarterly_sales_serve`` reads instead of the fact."""
     from ..operators.etl import refresh_quarterly_agg
 
+    backend = resolve_backend(backend)
+    if maintain_quarterly_agg and backend != "manifest":
+        raise ValueError(
+            "maintain_quarterly_agg needs the manifest backend (the "
+            f"snapshot diff drives the refresh); got {backend!r}"
+        )
     warehouse = warehouse_for(
         spark,
         warehouse_root,
         backend,
         resolve_auto_compact(backend, auto_compact_segments),
     )
-    if maintain_quarterly_agg and backend != "manifest":
-        raise ValueError(
-            "maintain_quarterly_agg needs the manifest backend (the "
-            f"snapshot diff drives the refresh); got {backend!r}"
-        )
     stream = read_transaction_stream(spark, tx_dir, max_files_per_trigger)
 
     # Master data is static for the stream's lifetime (the reference

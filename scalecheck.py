@@ -14,8 +14,6 @@ controlled duplicate fraction, entirely as JVM column expressions —
 deterministic, no RNG, no Python in the generation path.
 
 Usage: python scalecheck.py [sizes...]   (default 5000 20000 80000)
-       python scalecheck.py sink [n_batches] [batch_rows]  (sink
-                                             backend batch-cost trend)
        python scalecheck.py emb [sizes...]  (embedding ops;
                                              default 2000 8000 32000)
 Prints one JSON line per (operator, size) with wall seconds and
@@ -274,74 +272,6 @@ def run_suite(
         shutil.rmtree(root, ignore_errors=True)
 
 
-def sink_mode(spark, n_batches: int, batch_rows: int) -> None:
-    """Append-mostly insert-if-absent across backends: the scaling
-    question is whether per-batch cost GROWS with the accumulated
-    table (parquet reads its keys every batch) or stays flat (bloom
-    proves novelty from the metadata-scale filter). Every batch is
-    all-novel except one mid-run exact replay, which exercises the
-    maybe-seen path on both."""
-    from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.operators.sinks import (
-        make_sink,
-    )
-
-    def batch(b: int):
-        return spark.range(b * batch_rows, (b + 1) * batch_rows).select(
-            F.col("id").alias("k"),
-            F.md5(F.col("id").cast("string")).alias("v"),
-        )
-
-    total_keys = n_batches * batch_rows
-    for backend in ("parquet", "bloom"):
-        root = tempfile.mkdtemp(prefix=f"scalecheck_sink_{backend}_")
-        try:
-            sink = make_sink(
-                spark, root, keys={"t": ["k"]}, backend=backend
-            )
-            if backend == "bloom":
-                # size the filter to the workload (~10 bits/key for
-                # ~1% fpp) — an UNDERSIZED bloom saturates and the
-                # sink degrades to the plain anti-join plus the
-                # filter's fixed overhead (measured: the first cut of
-                # this harness ran 4.8M keys into the 2^20 default
-                # and the "bloom" curve grew exactly like parquet's)
-                sink.bloom_bits = 1 << max(20, (total_keys * 10).bit_length())
-            times = []
-            for b in range(n_batches):
-                t0 = time.time()
-                sink.insert_if_absent("t", batch(b))
-                times.append(round(time.time() - t0, 3))
-            t0 = time.time()
-            sink.insert_if_absent("t", batch(n_batches // 2))  # replay
-            replay_sec = round(time.time() - t0, 3)
-            n = sink.read("t").count()
-            assert n == n_batches * batch_rows, n
-            # skip the first-write outlier; window sizes adapt so
-            # tiny n_batches neither crash nor dilute the averages
-            hw = times[1:4] or times[:1]
-            tw = times[-3:]
-            head = sum(hw) / len(hw)
-            tail = sum(tw) / len(tw)
-            print(
-                json.dumps(
-                    {
-                        "backend": backend,
-                        "batch_rows": batch_rows,
-                        "n_batches": n_batches,
-                        "per_batch_sec": times,
-                        "early_avg_sec": round(head, 3),
-                        "late_avg_sec": round(tail, 3),
-                        "late_vs_early": round(tail / head, 2),
-                        "replay_batch_sec": replay_sec,
-                        "rows": n,
-                    }
-                ),
-                flush=True,
-            )
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
-
-
 def compact_mode(spark, n_batches: int, batch_rows: int) -> None:
     """Manifest-sink small-file growth and the compaction answer:
     read cost grows with the number of accumulated segment dirs (one
@@ -563,108 +493,6 @@ def bpe_mode(spark, merge_levels: list[int], n_docs: int = 20000) -> None:
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)
-
-
-def sinkwide_mode(
-    spark, levels: list[int], batch_rows: int, n_measure: int = 4
-) -> None:
-    """The Bloom sink's claimed win regime, constructed deliberately:
-    WIDE string keys (64 chars — two concatenated md5 hex digests,
-    the shape of a content-hash / URL key space), a payload column,
-    NO partition-prunable key column, and a LARGE pre-seeded
-    accumulated table. ``sink`` mode measures the batch-cost TREND
-    from an empty table; this mode measures the per-batch cost AT a
-    given accumulation, which is where the two backends' plans
-    actually diverge:
-
-    - parquet anti-join: every batch scans the accumulated key
-      column, dropDuplicates it (full shuffle of the seen set), and
-      sort-merge anti-joins the batch against it — per-batch cost
-      grows with accumulated keys × key width.
-    - bloom: k broadcast word-joins flag the batch; only the
-      fpp-bounded suspect residue pays an exact check, and that
-      check is inverted (seen scan BROADCAST-semi-joined against the
-      tiny suspect keys) so the accumulated relation is scanned but
-      never shuffled. Filter maintenance is O(set words)/batch.
-
-    For each level the table (and the bloom backend's filter) is
-    seeded directly — seeding through the sink would just re-measure
-    the trend — then ``n_measure`` all-novel batches plus one full
-    replay batch run through ``insert_if_absent``. The crossover
-    level (if any) is where bloom's flat check cost undercuts the
-    plain backend's grow-with-the-table shuffle."""
-    from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.operators.bloom import (
-        bloom_words,
-    )
-    from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.operators.sinks import (
-        make_sink,
-    )
-
-    def rows(lo: int, hi: int):
-        wide = F.concat(
-            F.md5(F.col("id").cast("string")),
-            F.md5(F.concat(F.col("id").cast("string"), F.lit("|w"))),
-        )
-        return spark.range(lo, hi).select(
-            wide.alias("k"),
-            F.repeat(F.md5(F.concat(F.col("id").cast("string"),
-                                    F.lit("|p"))), 4).alias("payload"),
-        )
-
-    for level in levels:
-        total = level + (n_measure + 1) * batch_rows
-        m_bits = 1 << max(20, (total * 10).bit_length())
-        for backend in ("parquet", "bloom"):
-            root = tempfile.mkdtemp(prefix=f"scalecheck_sw_{backend}_")
-            try:
-                sink = make_sink(
-                    spark, root, keys={"t": ["k"]}, backend=backend
-                )
-                # seed the accumulated state directly, in multiple
-                # files (the shape N prior appends leave behind)
-                seed = rows(0, level).repartition(
-                    max(32, level // 50_000)
-                )
-                seed.write.mode("overwrite").parquet(sink.path("t"))
-                if backend == "bloom":
-                    sink.bloom_bits = m_bits
-                    sink._write_bloom(
-                        "t",
-                        bloom_words(
-                            spark.read.parquet(sink.path("t")),
-                            ["k"], m_bits, sink.bloom_k,
-                        ),
-                    )
-                times = []
-                for b in range(n_measure):
-                    lo = level + b * batch_rows
-                    t0 = time.time()
-                    sink.insert_if_absent("t", rows(lo, lo + batch_rows))
-                    times.append(round(time.time() - t0, 3))
-                t0 = time.time()  # full replay of already-seeded keys
-                sink.insert_if_absent("t", rows(0, batch_rows))
-                replay_sec = round(time.time() - t0, 3)
-                n = sink.read("t").count()
-                assert n == level + n_measure * batch_rows, n
-                print(
-                    json.dumps(
-                        {
-                            "mode": "sinkwide",
-                            "backend": backend,
-                            "seed_keys": level,
-                            "batch_rows": batch_rows,
-                            "per_batch_sec": times,
-                            "avg_batch_sec": round(
-                                sum(times) / len(times), 3
-                            ),
-                            "replay_sec": replay_sec,
-                            "rows": n,
-                        }
-                    ),
-                    flush=True,
-                )
-            finally:
-                shutil.rmtree(root, ignore_errors=True)
 
 
 def lm_mode(spark, sizes: list[int]) -> None:
@@ -1304,16 +1132,6 @@ def main() -> None:
         spark.sparkContext.setLogLevel("ERROR")
         lm_mode(spark, sizes)
         return
-    if args and args[0] == "sinkwide":
-        rest = [int(a) for a in args[1:]]
-        spark = get_spark(app_name="scalecheck-sinkwide")
-        spark.sparkContext.setLogLevel("ERROR")
-        sinkwide_mode(
-            spark,
-            levels=rest[:-1] or [1_000_000, 4_000_000, 12_000_000],
-            batch_rows=rest[-1] if rest else 20_000,
-        )
-        return
     if args and args[0] == "compact":
         rest = [int(a) for a in args[1:]]
         spark = get_spark(app_name="scalecheck-compact")
@@ -1339,16 +1157,6 @@ def main() -> None:
         spark = get_spark(app_name="scalecheck-bpe")
         spark.sparkContext.setLogLevel("ERROR")
         bpe_mode(spark, merge_levels=rest or [1, 16, 64, 256])
-        return
-    if args and args[0] == "sink":
-        rest = [int(a) for a in args[1:]]
-        spark = get_spark(app_name="scalecheck-sink")
-        spark.sparkContext.setLogLevel("ERROR")
-        sink_mode(
-            spark,
-            n_batches=rest[0] if rest else 16,
-            batch_rows=rest[1] if len(rest) > 1 else 20000,
-        )
         return
     emb_mode = bool(args) and args[0] == "emb"
     if emb_mode:

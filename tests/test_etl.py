@@ -8,9 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.operators.etl import (
-    ParquetWarehouse,
     build_fact,
     normalize_dimensions,
+    warehouse_for,
 )
 from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.sources.csv_inputs import (
     read_customers_master,
@@ -128,7 +128,7 @@ def test_measure_rounding_half_up(spark, masters):
 
 def test_warehouse_idempotent_upsert(spark, fixture_paths, masters, tmp_path):
     tx = read_transactions(spark, str(fixture_paths / "transactions.csv"))
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    wh = warehouse_for(spark, str(tmp_path / "wh"))
     wh.load_batch(tx, *masters)
     first = sorted(map(tuple, wh.read("sales_fact").collect()))
     # replay the identical batch: nothing new may appear (ST3)
@@ -146,7 +146,7 @@ def test_time_id_stream_passthrough(spark, fixture_paths, masters, tmp_path):
     """Parity mode carries the stream-supplied Time_ID into the time
     dimension (src/GenerateStream.java:23-29) instead of deriving it."""
     tx = read_transactions(spark, str(fixture_paths / "transactions.csv"))
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh_tid"))
+    wh = warehouse_for(spark, str(tmp_path / "wh_tid"))
     wh.load_batch(tx, *masters, time_id_source="stream")
     td = {r.time_id: r for r in wh.read("time_dimension").collect()}
     # fact keeps O1 (T1), O2 (T2), O6 (T6) — their source ids land as-is
@@ -155,11 +155,11 @@ def test_time_id_stream_passthrough(spark, fixture_paths, masters, tmp_path):
 
 
 def test_upsert_mixed_replay_and_new_partitions(spark, fixture_paths, masters, tmp_path):
-    """Partition-pruned anti-join: a later batch mixing replayed rows
-    (existing partition) and brand-new rows (new partition) dedupes the
-    replays and appends the new rows exactly once."""
+    """A later batch mixing replayed rows (an existing month) and
+    brand-new rows (a new month) dedupes the replays and appends the
+    new rows exactly once."""
     tx = read_transactions(spark, str(fixture_paths / "transactions.csv"))
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    wh = warehouse_for(spark, str(tmp_path / "wh"))
     wh.load_batch(tx, *masters)
     base = wh.read("sales_fact").count()
 

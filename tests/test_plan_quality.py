@@ -12,7 +12,8 @@ import io
 import pytest
 
 from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.operators.etl import (
-    ParquetWarehouse,
+    WAREHOUSE_PARTITIONING,
+    ManifestWarehouse,
 )
 from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.plans.queries import (
     q00_pricing_summary,
@@ -85,7 +86,11 @@ def test_warehouse_fact_partition_pruning(spark, tmp_path):
     (tmp_path / "products.csv").write_text(PRODUCTS_CSV)
     (tmp_path / "customers.csv").write_text(CUSTOMERS_CSV)
     (tmp_path / "tx.csv").write_text(TRANSACTIONS_CSV)
-    wh = ParquetWarehouse(spark, str(d))
+    # the (year, month) hive layout (DeltaWarehouse's, and an option of
+    # the manifest warehouse)
+    wh = ManifestWarehouse(
+        spark, str(d), partitioning=dict(WAREHOUSE_PARTITIONING)
+    )
     wh.load_batch(
         read_transactions(spark, str(tmp_path / "tx.csv")),
         read_products_master(spark, str(tmp_path / "products.csv")),
@@ -99,45 +104,6 @@ def test_warehouse_fact_partition_pruning(spark, tmp_path):
     assert "PartitionFilters" in plan
     pf_line = next(l for l in plan.splitlines() if "PartitionFilters" in l)
     assert "year" in pf_line and "month" in pf_line
-
-
-def test_upsert_anti_join_is_partition_pruned(spark, tmp_path):
-    """The insert-if-absent anti-join must read only the existing
-    partitions the incoming batch touches — never the whole
-    accumulated table's keys (the reference's quadratic rescan,
-    src/Meshjoin.java:612-626)."""
-    from .test_etl import CUSTOMERS_CSV, PRODUCTS_CSV, TRANSACTIONS_CSV
-    from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.sources.csv_inputs import (
-        read_customers_master,
-        read_products_master,
-        read_transactions,
-    )
-
-    d = tmp_path / "wh"
-    (tmp_path / "products.csv").write_text(PRODUCTS_CSV)
-    (tmp_path / "customers.csv").write_text(CUSTOMERS_CSV)
-    (tmp_path / "tx.csv").write_text(TRANSACTIONS_CSV)
-    wh = ParquetWarehouse(spark, str(d))
-    wh.load_batch(
-        read_transactions(spark, str(tmp_path / "tx.csv")),
-        read_products_master(spark, str(tmp_path / "products.csv")),
-        read_customers_master(spark, str(tmp_path / "customers.csv")),
-    )
-    # a batch touching only 2019-01
-    incoming = spark.createDataFrame(
-        [("O99", 2019, 1)], "order_id string, year int, month int"
-    )
-    keys = wh._existing_keys("sales_fact", incoming, wh.read("sales_fact"))
-    plan = plan_of(keys)
-    pf_line = next(l for l in plan.splitlines() if "PartitionFilters" in l)
-    # static per-partition null-safe equality predicates, pushed to
-    # the scan (eqNullSafe renders as <=> and still partition-prunes;
-    # plain = would silently exclude the null partition from the
-    # seen-set and re-insert replayed NULL-partition rows)
-    assert "year" in pf_line and "month" in pf_line
-    assert "2019" in pf_line and "<=> 1)" in pf_line
-    # only the touched partition's keys are read
-    assert {r.order_id for r in keys.collect()} == {"O1", "O2"}
 
 
 def test_ivf_assignment_is_shuffle_free(spark, sf_dir):

@@ -823,7 +823,7 @@ def test_make_sink_rejects_protocol_knobs_off_manifest(spark, tmp_path):
     with pytest.raises(ValueError, match="commit_protocol"):
         make_sink(
             spark, str(tmp_path), keys={"t": ["k"]},
-            backend="parquet", commit_protocol="objectstore",
+            backend="delta", commit_protocol="objectstore",
         )
     with pytest.raises(ValueError, match="unknown commit_protocol"):
         make_sink(
@@ -833,5 +833,5 @@ def test_make_sink_rejects_protocol_knobs_off_manifest(spark, tmp_path):
     with pytest.raises(ValueError, match="compact_async"):
         make_sink(
             spark, str(tmp_path), keys={"t": ["k"]},
-            backend="parquet", compact_async=True,
+            backend="delta", compact_async=True,
         )

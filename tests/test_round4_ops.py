@@ -391,10 +391,10 @@ def test_warehouse_totals_guard(spark, tmp_path):
     import pytest
 
     from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.operators.etl import (
-        ParquetWarehouse,
+        warehouse_for,
     )
 
-    wh = ParquetWarehouse(spark, str(tmp_path / "empty_wh"))
+    wh = warehouse_for(spark, str(tmp_path / "empty_wh"))
     with pytest.raises(RuntimeError, match="sales_fact"):
         wh.totals()
 

@@ -6,11 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.operators import (
-    bloom,
     dedup,
-)
-from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.operators.sinks import (
-    make_sink,
 )
 
 
@@ -23,39 +19,6 @@ def test_span_removal_survives_null_text(spark):
     )
     out = dedup.remove_duplicate_spans(docs)
     assert out.count() == 3  # every doc passes through, uncut
-
-
-def test_bloom_empty_batch_after_growth(spark, tmp_path):
-    # pre-fix: an empty batch's bloom had ZERO rows, bloom_meta fell
-    # back to module defaults, and the merge raised shape-mismatch
-    # after any auto-growth (or under custom bloom_bits)
-    sink = make_sink(spark, str(tmp_path), keys={"t": ["k"]}, backend="bloom")
-    sink.bloom_bits = 256
-    b1 = spark.createDataFrame(
-        [(i, "x") for i in range(100)], "k long, v string"
-    )
-    sink.insert_if_absent("t", b1)
-    b2 = spark.createDataFrame(
-        [(i, "y") for i in range(100, 200)], "k long, v string"
-    )
-    sink.insert_if_absent("t", b2)  # auto-growth rebuild
-    empty = spark.createDataFrame([], "k long, v string")
-    sink.insert_if_absent("t", empty)  # must not raise
-    sink.insert_if_absent("t", b2)  # replay still a no-op
-    assert sink.read("t").count() == 200
-
-
-def test_bloom_sentinel_never_matches_a_probe(spark):
-    # the sentinel word (w=-1) must be invisible to membership checks
-    df = spark.createDataFrame([(i,) for i in range(50)], "k long")
-    bw = bloom.bloom_words(df, ["k"], m_bits=1 << 12)
-    assert bw.filter("w = -1").count() == 1
-    assert (
-        bloom.with_maybe_seen(df, ["k"], bw)
-        .filter("NOT maybe_seen")
-        .count()
-        == 0
-    )
 
 
 def test_dataset_builder_keeps_unscorable_docs(spark, tmp_path):

@@ -10,7 +10,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.operators import (
-    bloom,
     text_profile,
 )
 
@@ -18,24 +17,6 @@ from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakista
 WORDS = st.lists(
     st.sampled_from(["aa", "bb", "ab", "the", "x1"]), max_size=10
 )
-KEYS = st.lists(
-    st.one_of(
-        st.integers(min_value=-(2**40), max_value=2**40),
-        st.none(),
-    ),
-    min_size=1,
-    max_size=40,
-    unique=True,
-)
-
-
-@settings(max_examples=10, deadline=None)
-@given(KEYS)
-def test_bloom_never_false_negative_property(spark, keys):
-    df = spark.createDataFrame([(k,) for k in keys], "k long")
-    bw = bloom.bloom_words(df, ["k"], m_bits=1 << 12)
-    flagged = bloom.with_maybe_seen(df, ["k"], bw)
-    assert flagged.filter("NOT maybe_seen").count() == 0
 
 
 @settings(max_examples=8, deadline=None)

@@ -1,7 +1,6 @@
-"""Round-8 fixes: deferred bloom-version GC (r7 ADVICE medium), the
-declared bench measurement split (r7 VERDICT #7), the per-epoch
-build-config guard (r7 ADVICE low), and multi-epoch builds under one
-snapshot (r7 VERDICT #6)."""
+"""Round-8 fixes: the declared bench measurement split (r7 VERDICT
+#7), the per-epoch build-config guard (r7 ADVICE low), and
+multi-epoch builds under one snapshot (r7 VERDICT #6)."""
 
 from __future__ import annotations
 
@@ -11,61 +10,6 @@ from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakista
     CorpusPipeline,
     DatasetBuilder,
 )
-from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.operators.sinks import (
-    make_sink,
-)
-
-
-# ------------------------------------------------- bloom version GC
-
-
-def _bloom_sink(spark, root):
-    return make_sink(spark, str(root), keys={"t": ["k"]}, backend="bloom")
-
-
-def test_bloom_old_version_survives_until_next_batch(spark, tmp_path):
-    """The previous bloom version must NOT be deleted inside the batch
-    that supersedes it: the batch's own lazy ``flagged``/``admitted``
-    plans still scan it until the data append materializes (r7 ADVICE
-    medium — an eager delete fails the batch on any recompute). It is
-    garbage-collected at the START of the following batch instead."""
-    sink = _bloom_sink(spark, tmp_path)
-
-    def batch(lo, hi):
-        return spark.range(lo, hi).selectExpr(
-            "id AS k", "md5(CAST(id AS STRING)) AS v"
-        )
-
-    sink.insert_if_absent("t", batch(0, 50))  # writes v0
-    assert sink._bloom_versions("t") == [0]
-    # batch 2 merges -> writes v1; v0 must still exist afterwards
-    # (deletion deferred), because this batch's plans referenced it
-    sink.insert_if_absent("t", batch(50, 100))
-    assert 0 in sink._bloom_versions("t")
-    assert len(sink._bloom_versions("t")) >= 2
-    # batch 3's pre-batch GC drops everything but the newest pre-batch
-    # version; version count stays bounded (never grows with batches)
-    sink.insert_if_absent("t", batch(100, 150))
-    assert len(sink._bloom_versions("t")) <= 2
-    assert sink.read("t").count() == 150
-    # replay stays a no-op through the GC cycle
-    sink.insert_if_absent("t", batch(0, 50))
-    assert sink.read("t").count() == 150
-
-
-def test_bloom_gc_keeps_only_newest(spark, tmp_path):
-    sink = _bloom_sink(spark, tmp_path)
-    df = spark.range(10).selectExpr("id AS k", "'x' AS v")
-    sink.insert_if_absent("t", df)
-    sink.insert_if_absent(
-        "t", spark.range(10, 20).selectExpr("id AS k", "'y' AS v")
-    )
-    vs = sink._bloom_versions("t")
-    assert len(vs) >= 2
-    sink._gc_stale_blooms("t")
-    assert sink._bloom_versions("t") == [vs[-1]]
-    # the surviving version is readable and still a superset of keys
-    assert sink._read_bloom("t") is not None
 
 
 # ------------------------------------------- declared measurement set

@@ -181,4 +181,4 @@ def test_streaming_facades_thread_auto_compaction(spark, tmp_path):
     assert len(live) <= 3  # bound 2 + at most one fresh segment
     # non-manifest backends refuse the policy
     with pytest.raises(ValueError, match="manifest"):
-        warehouse_for(spark, wh_root, "parquet", auto_compact_segments=2)
+        warehouse_for(spark, wh_root, "delta", auto_compact_segments=2)

@@ -1,9 +1,9 @@
 """Sink-backend contract tests: the insert-if-absent protocol must
 behave identically on every backend (first writer of a key wins,
-replays are no-ops, partitioned tables stay prunable). The parquet
-anti-join backend runs everywhere; the Delta MERGE backend is
-env-gated on the optional delta-spark package (skip-marked here when
-absent, like the PIL image tests)."""
+replays are no-ops, partitioned tables stay prunable). The manifest
+backend runs everywhere; the Delta MERGE backend is env-gated on the
+optional delta-spark package (skip-marked here when absent, like the
+PIL image tests)."""
 
 from __future__ import annotations
 
@@ -13,15 +13,14 @@ from pyspark.sql import functions as F
 from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.operators.sinks import (
     BACKENDS,
     DeltaMergeSink,
-    ParquetAntiJoinSink,
+    ManifestParquetSink,
     delta_available,
     make_sink,
+    read_table,
 )
 
 BACKEND_PARAMS = [
-    "parquet",
     "manifest",
-    "bloom",
     pytest.param(
         "delta",
         marks=pytest.mark.skipif(
@@ -81,7 +80,7 @@ def test_partitioned_insert_and_prune(spark, tmp_path, backend):
         sink.read("t").filter(F.col("p") == 10)._jdf.queryExecution()
         .executedPlan().toString()
     )
-    if backend == "parquet":
+    if backend == "manifest":
         assert "PartitionFilters: [" in plan and "(p" in plan.split(
             "PartitionFilters"
         )[1][:80]
@@ -102,11 +101,8 @@ def test_null_key_components_do_not_duplicate(spark, tmp_path, backend):
 
 @pytest.mark.parametrize("backend", BACKEND_PARAMS)
 def test_null_partition_replay_noop(spark, tmp_path, backend):
-    # the partition-pruning pre-pass must scope with null-safe
-    # equality: a plain == against a NULL partition value excludes
-    # the __HIVE_DEFAULT_PARTITION__ directory from the "seen" scan,
-    # so replayed NULL-partition rows would be re-inserted even
-    # though the key anti-join itself is null-safe
+    # rows in the NULL hive partition (__HIVE_DEFAULT_PARTITION__)
+    # must read back as seen, so their replay is a no-op
     sink = make_sink(
         spark, str(tmp_path), keys={"t": ["k"]},
         partitioning={"t": ["p"]}, backend=backend,
@@ -123,7 +119,7 @@ def test_null_partition_replay_noop(spark, tmp_path, backend):
 
 
 def test_read_missing_table_returns_none(spark, tmp_path):
-    sink = _sink(spark, tmp_path, "parquet")
+    sink = _sink(spark, tmp_path, "manifest")
     assert sink.read("t") is None
 
 
@@ -152,20 +148,81 @@ def test_crashed_segment_is_invisible(spark, tmp_path):
 
 
 def test_make_sink_backend_registry(spark, tmp_path):
-    assert set(BACKENDS) == {"parquet", "manifest", "delta", "bloom"}
+    assert set(BACKENDS) == {"manifest", "delta"}
     assert isinstance(
-        make_sink(spark, str(tmp_path), keys={}), ParquetAntiJoinSink
+        make_sink(spark, str(tmp_path), keys={}), ManifestParquetSink
     )
-    with pytest.raises(ValueError, match="unknown sink backend"):
-        make_sink(spark, str(tmp_path), keys={}, backend="iceberg")
+    # the retired backend names are unknown, not aliases
+    for gone in ("iceberg", "parquet", "bloom"):
+        with pytest.raises(
+            ValueError, match=r"unknown sink backend.*\['delta', 'manifest'\]"
+        ):
+            make_sink(spark, str(tmp_path), keys={}, backend=gone)
     if not delta_available():
         with pytest.raises(ImportError, match="delta-spark"):
             DeltaMergeSink(spark, str(tmp_path))
-        # auto falls back to parquet when delta is absent
+        # auto falls back to manifest when delta is absent
         assert isinstance(
             make_sink(spark, str(tmp_path), keys={}, backend="auto"),
-            ParquetAntiJoinSink,
+            ManifestParquetSink,
         )
+
+
+def test_manifest_options_validated_by_backend_name(spark, tmp_path):
+    """Manifest-only options are checked against the backend NAME
+    before any sink is built: delta rejects them even where
+    delta-spark is absent, and only the manifest option names pass
+    (neither a base field such as ``root`` nor a method name)."""
+    from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.operators.etl import (
+        warehouse_for,
+    )
+
+    root = str(tmp_path / "wh")
+    with pytest.raises(ValueError, match="apply only to the 'manifest'"):
+        make_sink(spark, root, keys={}, backend="delta", tier_factor=3.0)
+    with pytest.raises(ValueError, match="apply only to the 'manifest'"):
+        warehouse_for(spark, root, "delta", auto_compact_segments=4)
+    for bad in ({"root": str(tmp_path / "elsewhere")},
+                {"insert_if_absent": None}, {"keys": {}}):
+        with pytest.raises(ValueError, match="unknown sink option"):
+            warehouse_for(spark, root, sink_kwargs=bad)
+    with pytest.raises(ValueError, match="unknown commit_protocol"):
+        warehouse_for(spark, root, sink_kwargs={"commit_protocol": "s3"})
+    wh = warehouse_for(
+        spark, root, sink_kwargs={"tier_factor": 3.0, "compact_async": True}
+    )
+    assert wh.root == root
+    assert (wh.tier_factor, wh.compact_async) == (3.0, True)
+    # the warehouse's own zone-map default survives unrelated options
+    assert wh.stats_cols == {"sales_fact": ["order_date"]}
+
+
+def test_default_warehouse_reads_back_through_read_table(spark, tmp_path):
+    """Every writer and ``read_table`` share one default backend: a
+    table written through the ``MetroWarehouse``/``warehouse_for``
+    defaults reads back through the ``read_table`` default instead of
+    reading as absent (None)."""
+    from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.operators.etl import (
+        warehouse_for,
+    )
+    from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.pipeline import (
+        MetroWarehouse,
+    )
+
+    products = spark.createDataFrame(
+        [("P1", "widget", 5.0, "S1", "ST1")],
+        "product_id string, product_name string, price double, "
+        "supplier_id string, store_id string",
+    )
+    for root, wh in (
+        (str(tmp_path / "a"), warehouse_for(spark, str(tmp_path / "a"))),
+        (str(tmp_path / "b"),
+         MetroWarehouse(spark, str(tmp_path / "b")).warehouse),
+    ):
+        wh.insert_if_absent("products", products)
+        got = read_table(spark, root, "products")
+        assert got is not None
+        assert [r.product_id for r in got.collect()] == ["P1"]
 
 
 @pytest.mark.parametrize("backend", BACKEND_PARAMS)
@@ -768,7 +825,7 @@ def test_zone_maps_rejected_off_manifest_backend(spark, tmp_path):
             spark,
             str(tmp_path),
             keys={"t": ["k"]},
-            backend="parquet",
+            backend="delta",
             stats_cols={"t": ["k"]},
         )
 
@@ -875,7 +932,7 @@ def test_schema_evolution_rejected_off_manifest_backend(spark, tmp_path):
             spark,
             str(tmp_path),
             keys={"t": ["k"]},
-            backend="parquet",
+            backend="delta",
             allow_schema_evolution=True,
         )
 

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 
 from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.operators.etl import (
-    ParquetWarehouse,
+    warehouse_for,
 )
 from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.sources.csv_inputs import (
     read_customers_master,
@@ -38,15 +38,8 @@ def stream_env(tmp_path_factory):
 
 
 def _fact_rows(spark, root):
-    # stream warehouses default to the manifest backend; batch
-    # ParquetWarehouse roots fall back to the plain layout
-    from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.operators.etl import (
-        warehouse_for,
-    )
-
-    df = warehouse_for(spark, root, "manifest").read("sales_fact")
-    if df is None:
-        df = ParquetWarehouse(spark, root).read("sales_fact")
+    # batch and stream warehouses share the manifest default
+    df = warehouse_for(spark, root).read("sales_fact")
     return sorted(tuple(r) for r in df.select(*sorted(df.columns)).collect())
 
 
@@ -64,7 +57,7 @@ def test_streaming_equals_batch(spark, stream_env):
     )
     q.awaitTermination(120)
 
-    batch_wh = ParquetWarehouse(spark, str(stream_env / "wh_batch"))
+    batch_wh = warehouse_for(spark, str(stream_env / "wh_batch"))
     tx = read_transactions(spark, str(stream_env / "tx_full.csv"))
     batch_wh.load_batch(tx, products, customers)
 
@@ -99,7 +92,7 @@ def test_streaming_checkpoint_resume_processes_only_new_files(
     rows_after_second = _fact_rows(spark, wh_root)
 
     assert len(rows_after_second) > len(rows_after_first)
-    batch_wh = ParquetWarehouse(spark, str(tmp_path / "wh_batch_resume"))
+    batch_wh = warehouse_for(spark, str(tmp_path / "wh_batch_resume"))
     tx = read_transactions(spark, str(stream_env / "tx_full.csv"))
     batch_wh.load_batch(tx, products, customers)
     assert rows_after_second == _fact_rows(spark, str(tmp_path / "wh_batch_resume"))

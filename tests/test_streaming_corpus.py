@@ -186,18 +186,17 @@ def test_stream_neardup_admission(spark, tmp_path):
 
 
 def test_admit_neardup_batch_is_replay_idempotent(spark, tmp_path):
-    from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.operators.etl import (
-        ParquetWarehouse,
+    from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.operators.sinks import (
+        make_sink,
     )
 
-    wh = ParquetWarehouse(
+    wh = make_sink(
         spark,
         str(tmp_path / "wh"),
         keys={
             sc.CURATED_TABLE: ["text_fp"],
             sc.BAND_INDEX_TABLE: ["band_khash", "owner_doc_id"],
         },
-        partitioning={},
     )
     batch = spark.createDataFrame(
         [

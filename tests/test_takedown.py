@@ -30,9 +30,7 @@ from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakista
 )
 
 BACKEND_PARAMS = [
-    "parquet",
     "manifest",
-    "bloom",
     pytest.param(
         "delta",
         marks=pytest.mark.skipif(
@@ -101,7 +99,7 @@ def test_delete_missing_column_raises(spark, tmp_path, backend):
         sink.delete_keys("t", spark.createDataFrame([(1,)], "z long"))
 
 
-@pytest.mark.parametrize("backend", ["parquet", "manifest"])
+@pytest.mark.parametrize("backend", ["manifest"])
 def test_delete_on_missing_table_is_noop(spark, tmp_path, backend):
     sink = _sink(spark, tmp_path, backend)
     assert sink.delete_keys("t", _keys(spark, [1])) in (None, False)
@@ -651,37 +649,3 @@ def test_rewrite_delete_with_outstanding_tombstone_no_resurrection(
     sink.compact("t", materialize_deletes=True)
     assert {r.k for r in sink.read("t").collect()} == {1, 4}
     assert sink._split_live("t")[1] == []
-
-
-def test_parquet_delete_crash_between_renames_recovers(spark, tmp_path):
-    """The plain-parquet backend's two-rename swap crash window: a
-    crash BETWEEN the renames leaves no table directory — the table
-    stranded in a complete ``_old_*`` sibling. _recover_swap (run at
-    the start of every read/insert/delete) must restore the table
-    (the interrupted delete is lost but replayable) and the next
-    write must GC the orphan dirs — without it, the next
-    insert_if_absent silently re-creates an EMPTY table."""
-    import os
-
-    sink = _sink(spark, tmp_path, "parquet")
-    sink.insert_if_absent(
-        "t", _rows(spark, [(1, "a"), (2, "b"), (3, "c")])
-    )
-    path = sink.path("t")
-    # simulate the crash state: first rename happened (table moved to
-    # _old_), second never did; the rewrite's survivors are orphaned
-    os.rename(path, f"{path}_old_deadbeef")
-    os.makedirs(f"{path}_rewrite_cafe")
-    # read recovers the full pre-delete table (no data loss)
-    assert {r.k for r in sink.read("t").collect()} == {1, 2, 3}
-    # the lost delete replays cleanly against the restored table
-    assert sink.delete_keys("t", _keys(spark, [2])) is True
-    assert {r.k for r in sink.read("t").collect()} == {1, 3}
-    # write-path recovery GC'd the orphan siblings
-    base = os.path.dirname(path)
-    orphans = [
-        d
-        for d in os.listdir(base)
-        if "_old_" in d or "_rewrite_" in d
-    ]
-    assert orphans == []

@@ -23,6 +23,7 @@ from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakista
     kmeans_centroids,
 )
 from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.operators.sinks import (
+    MergeSink,
     make_sink,
 )
 from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.streaming import (
@@ -155,11 +156,10 @@ def test_completed_takedown_records_done_and_replays(spark, tmp_path):
 
 
 def test_intent_requires_manifest_backend(spark, tmp_path):
-    wh = make_sink(
-        spark,
-        str(tmp_path),
-        keys={sc.CURATED_TABLE: ["text_fp"]},
-        backend="parquet",
+    # any non-manifest sink (delta where installed) is refused; the
+    # base class stands in for one everywhere
+    wh = MergeSink(
+        spark, str(tmp_path), keys={sc.CURATED_TABLE: ["text_fp"]}
     )
     with pytest.raises(ValueError, match="manifest"):
         sc.takedown_with_intent(
