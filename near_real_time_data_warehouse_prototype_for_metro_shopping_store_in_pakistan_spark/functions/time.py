@@ -38,21 +38,30 @@ def is_weekend(ts: Column) -> Column:
     return F.dayofweek(ts).isin(1, 7)
 
 
+def time_attribute_columns(ts: Column) -> dict[str, Column]:
+    """The TimeDimension attribute columns
+    (SQL/Star_Schema_Metro.sql:45-56) derived from ``ts``, by output
+    name in table order — for callers that emit them inside a wider
+    projection (``operators.etl.build_fact``)."""
+    return {
+        "year": F.year(ts),
+        "month": F.month(ts),
+        "day": F.dayofmonth(ts),
+        "week": F.weekofyear(ts),  # ISO week, matches WeekFields.ISO
+        "quarter": F.quarter(ts),
+        "day_name": F.upper(F.date_format(ts, "EEEE")),
+        "is_weekend": is_weekend(ts),
+        "season": season(F.month(ts)),
+    }
+
+
 def with_time_attributes(df: DataFrame, ts_col: str = "order_date") -> DataFrame:
     """Append the TimeDimension attribute columns
-    (SQL/Star_Schema_Metro.sql:45-56) derived from ``ts_col``.
+    (SQL/Star_Schema_Metro.sql:45-56) derived from ``ts_col``, in one
+    projection; a column of ``df`` with an attribute's name is
+    replaced in place.
     """
-    ts = F.col(ts_col)
-    return (
-        df.withColumn("year", F.year(ts))
-        .withColumn("month", F.month(ts))
-        .withColumn("day", F.dayofmonth(ts))
-        .withColumn("week", F.weekofyear(ts))  # ISO week, matches WeekFields.ISO
-        .withColumn("quarter", F.quarter(ts))
-        .withColumn("day_name", F.upper(F.date_format(ts, "EEEE")))
-        .withColumn("is_weekend", is_weekend(ts))
-        .withColumn("season", season(F.month(ts)))
-    )
+    return df.withColumns(time_attribute_columns(F.col(ts_col)))
 
 
 def time_dimension(

@@ -21,9 +21,11 @@ reference (buffers registered but never used in the join —
 src/Meshjoin.java:22-23,155 vs :343-457) and is superseded by the
 broadcast join (SURVEY §4).
 
-Scale notes: master data (products/customers) broadcasts; the only
-shuffle is the dropDuplicates on the dedup key, which at 100 TB rides
-the same hash partitioning the fact table is written with.
+Scale notes: master data (products/customers) broadcasts from
+``master_lookups`` (a streaming caller pins them once); the only
+shuffle of the fact build is the one-row-per-key window, which at
+100 TB rides the same hash partitioning the fact table is written
+with.
 
 Every table lands through one insert-if-absent sink
 (``operators.sinks``): ``warehouse_for`` builds the star-schema
@@ -39,7 +41,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.time import time_dimension, with_time_attributes
+from ..functions.time import time_attribute_columns, time_dimension
 from .sinks import (
     DeltaMergeSink,
     ManifestParquetSink,
@@ -80,12 +82,39 @@ def normalize_dimensions(
     }
 
 
+def master_lookups(
+    products_master: DataFrame, customers_master: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """The broadcast side of ``build_fact``: (products, customers)
+    projected to the columns the fact needs, deduplicated on their
+    ids, each carrying its match flag (``_prod_matched`` /
+    ``_cust_matched``, constant True — NULL after the left join means
+    no match). Both derive from the masters alone, so a caller whose
+    masters are static (the streaming consumer) builds and pins them
+    once and passes them to every ``build_fact`` call; otherwise each
+    call re-runs the two dedup shuffles."""
+    prod = (
+        products_master.select(
+            "product_id", "price", "supplier_id", "store_id"
+        )
+        .dropDuplicates(["product_id"])
+        .withColumn("_prod_matched", F.lit(True))
+    )
+    cust = (
+        customers_master.select("customer_id")
+        .dropDuplicates(["customer_id"])
+        .withColumn("_cust_matched", F.lit(True))
+    )
+    return prod, cust
+
+
 def build_fact(
     transactions: DataFrame,
     products_master: DataFrame,
     customers_master: DataFrame,
     fact_key: tuple[str, ...] = DEFAULT_FACT_KEY,
     observation=None,
+    lookups: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """Stream-batch × master-data join + measure derivation.
 
@@ -97,24 +126,26 @@ def build_fact(
     customer-only path they are the reference's point lookups
     (src/Meshjoin.java:428-429), which the single join already covers.
 
+    ``lookups`` is ``master_lookups(products_master,
+    customers_master)``, typically pinned by the caller; None derives
+    it here (two dedup shuffles per call).
+
+    One fact row per ``fact_key``: exact-duplicate input lines share
+    their key, so the ``row_number`` below also removes them.
+
     Measures: Total_Units_Sold = quantity, Total_Revenue =
     round(quantity * price, 3) HALF_UP (src/Meshjoin.java:724-725).
+    The time attributes and measures come out of ONE projection after
+    the window (plan-building cost is per DataFrame call, and this
+    runs once per micro-batch).
     """
-    prod = F.broadcast(
-        products_master.select(
-            "product_id", "price", "supplier_id", "store_id"
-        ).dropDuplicates(["product_id"])
-    )
-    cust = F.broadcast(
-        customers_master.select("customer_id").dropDuplicates(["customer_id"])
-        .withColumn("_cust_matched", F.lit(True))
-    )
+    from pyspark.sql import Window
+
+    prod, cust = lookups or master_lookups(products_master, customers_master)
     joined = transactions.join(
-        prod.withColumn("_prod_matched", F.lit(True)), "product_id", "left"
-    ).join(cust, "customer_id", "left")
-    kept = F.coalesce(F.col("_prod_matched"), F.lit(False)) | F.coalesce(
-        F.col("_cust_matched"), F.lit(False)
-    )
+        F.broadcast(prod), "product_id", "left"
+    ).join(F.broadcast(cust), "customer_id", "left")
+    kept = F.col("_prod_matched").isNotNull() | F.col("_cust_matched").isNotNull()
     if observation is not None:
         # The reference only *logs* unmatched stream records before
         # dropping them (src/Meshjoin.java:295-298); ``observe`` is the
@@ -126,31 +157,32 @@ def build_fact(
             F.sum(kept.cast("long")).alias("n_matched"),
             F.sum((~kept).cast("long")).alias("n_dropped"),
         )
-    joined = joined.filter(kept)
+    cols = [
+        c for c in joined.columns if c not in ("_prod_matched", "_cust_matched")
+    ]
     # The reference keeps the first queue arrival per Order_ID
     # (src/Meshjoin.java:373,419); batch has no arrival order, so pick
     # the minimum over the remaining columns — deterministic under any
     # partitioning (plain dropDuplicates keeps an arbitrary row).
-    from pyspark.sql import Window
-
-    order_cols = [c for c in joined.columns if c not in fact_key]
     w = Window.partitionBy(*fact_key).orderBy(
-        *[F.col(c).asc_nulls_last() for c in order_cols]
+        *[F.col(c).asc_nulls_last() for c in cols if c not in fact_key]
     )
-    deduped = (
-        joined.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+    ranked = joined.where(kept).select(
+        *cols, F.row_number().over(w).alias("_rn")
     )
-    fact = (
-        with_time_attributes(deduped, "order_date")
-        .withColumn("total_units_sold", F.col("quantity_ordered"))
-        .withColumn(
-            "total_revenue", F.round(F.col("quantity_ordered") * F.col("price"), 3)
-        )
-        .drop("_prod_matched", "_cust_matched")
+    derived = {
+        **time_attribute_columns(F.col("order_date")),
+        "total_units_sold": F.col("quantity_ordered"),
+        "total_revenue": F.round(
+            F.col("quantity_ordered") * F.col("price"), 3
+        ),
+    }
+    # same columns, same order as appending each with withColumn: a
+    # derived name already present is replaced in place
+    out = [derived.pop(c).alias(c) if c in derived else c for c in cols]
+    return ranked.where(F.col("_rn") == 1).select(
+        *out, *[col.alias(name) for name, col in derived.items()]
     )
-    return fact
 
 
 # The star-schema table registry: dedup keys per table, plus the
@@ -351,7 +383,10 @@ class MaintainedAggregate:
         if neg is not None:
             n = self._partial(neg, "_deleted_at", -1)
             partial = n if partial is None else partial.unionByName(n)
-        sink.insert_with_horizon(self.agg_table, partial, latest)
+        # unique on the table key by construction (see
+        # insert_with_horizon); ``last`` lets the commit skip the
+        # seen-side anti-join while no other refresh has moved the horizon
+        sink.insert_with_horizon(self.agg_table, partial, latest, since=last)
         return latest
 
     def serve(self) -> DataFrame:
@@ -462,6 +497,7 @@ class WarehouseOps:
         fact_key: tuple[str, ...] = DEFAULT_FACT_KEY,
         time_id_source: str | None = None,
         skip_dims: bool = False,
+        lookups: tuple[DataFrame, DataFrame] | None = None,
     ) -> None:
         """One micro-batch (or one full batch) through the whole ETL:
         dims -> time dimension -> fact, each insert-if-absent.
@@ -480,6 +516,10 @@ class WarehouseOps:
         them once skip straight to the per-batch tables (time
         dimension + fact). Replay-safe: a restarted stream passes
         False for its first batch and the upserts no-op.
+
+        ``lookups`` is passed to ``build_fact``: the caller's pinned
+        ``master_lookups(products_master, customers_master)``, or None
+        to derive them from the masters in this batch's plan.
         """
         if not skip_dims:
             dims = normalize_dimensions(products_master, customers_master)
@@ -488,7 +528,8 @@ class WarehouseOps:
         # both inserts below derive from the fact: persist it so the
         # source batch is scanned and joined once, not once per insert
         fact = build_fact(
-            transactions, products_master, customers_master, fact_key
+            transactions, products_master, customers_master, fact_key,
+            lookups=lookups,
         ).persist()
         try:
             src = "time_id" if time_id_source == "stream" else None

@@ -513,7 +513,9 @@ class ManifestParquetSink(MergeSink):
         return live, all_nums, nxt
 
     def _split_live(
-        self, name: str
+        self,
+        name: str,
+        listing: tuple[list[tuple[int, str, dict]], set[int]] | None = None,
     ) -> tuple[
         list[tuple[int, str, list[int] | None]],
         list[tuple[int, str, list[str]]],
@@ -522,8 +524,11 @@ class ManifestParquetSink(MergeSink):
     ]:
         """(live DATA segments, live TOMBSTONE segments (number, dir,
         match columns) ascending, all committed snapshot numbers, next
-        free number) — the tombstone-aware twin of ``_segments``."""
-        rows, claimed = self._list_committed(name)
+        free number) — the tombstone-aware twin of ``_segments``.
+        ``listing`` is a ``_list_committed(name)`` result to split
+        instead of listing again (a caller that reads other manifest
+        fields from the same listing)."""
+        rows, claimed = listing or self._list_committed(name)
         committed = []  # (num, dir, covers, nonempty, tombstone_on)
         superseded: set[int] = set()
         for n, p, meta in rows:
@@ -598,6 +603,7 @@ class ManifestParquetSink(MergeSink):
         tombstone_on: list[str] | None = None,
         redacted_at: list[int] | None = None,
         upto: int | None = None,
+        drop_if_empty: bool = False,
     ) -> str:
         """Write ``df`` (hive-partitioned when configured) plus its
         complete ``_COMMITTED.json`` manifest into a fresh staging
@@ -607,7 +613,10 @@ class ManifestParquetSink(MergeSink):
         (objectstore protocol, where this directory is ALREADY at its
         permanent content-addressed location and is never moved).
         ``df=None`` stages a zero-file segment: a manifest-only commit
-        (it carries ``upto`` — see ``insert_with_horizon``).
+        (it carries ``upto`` — see ``insert_with_horizon``). With
+        ``drop_if_empty``, a write the footers prove held 0 rows is
+        turned into one too (its empty part-files are deleted), so
+        scans never open it.
 
         The manifest records the staged data bytes (``bytes``) so the
         size-tiered auto-compaction policy reads segment sizes from
@@ -621,6 +630,7 @@ class ManifestParquetSink(MergeSink):
         job per read (see ``_read_parquet``)."""
         import glob
         import json
+        import shutil
         import uuid
 
         tdir = self._table_dir(name)
@@ -659,6 +669,10 @@ class ManifestParquetSink(MergeSink):
                 continue
             if nrows is not None:
                 nrows += n
+        if drop_if_empty and files and nrows == 0:
+            shutil.rmtree(stage)
+            os.makedirs(stage)
+            files, nbytes, df = [], 0, None
         meta: dict = {"files": files, "bytes": nbytes}
         if nrows is not None:
             meta["rows"] = nrows
@@ -1116,17 +1130,17 @@ class ManifestParquetSink(MergeSink):
         return self._read_live(name, live, tombs)
 
     def _align_schema(
-        self, name: str, incoming: DataFrame, existing: DataFrame
+        self, name: str, incoming: DataFrame, existing: T.StructType
     ) -> DataFrame:
-        """Reconcile a batch's columns with the table's: identical
-        sets are re-ordered to the table's order; differing sets
-        either fail loudly (default) or — under
-        ``allow_schema_evolution`` — fill omitted non-key columns with
-        typed NULLs and append new columns (sorted, for a stable
-        staged layout)."""
-        inc, exi = set(incoming.columns), set(existing.columns)
+        """Reconcile a batch's columns with the table's (``existing``,
+        its live read schema): identical sets are re-ordered to the
+        table's order; differing sets either fail loudly (default) or
+        — under ``allow_schema_evolution`` — fill omitted non-key
+        columns with typed NULLs and append new columns (sorted, for a
+        stable staged layout)."""
+        inc, exi = set(incoming.columns), set(existing.names)
         if inc == exi:
-            return incoming.select(*existing.columns)
+            return incoming.select(*existing.names)
         if not self.allow_schema_evolution:
             raise ValueError(
                 f"schema mismatch for table {name!r}: batch adds "
@@ -1142,9 +1156,9 @@ class ManifestParquetSink(MergeSink):
             )
         for c in exi - inc:
             incoming = incoming.withColumn(
-                c, F.lit(None).cast(existing.schema[c].dataType)
+                c, F.lit(None).cast(existing[c].dataType)
             )
-        return incoming.select(*existing.columns, *sorted(inc - exi))
+        return incoming.select(*existing.names, *sorted(inc - exi))
 
     def _union(self, a: DataFrame, b: DataFrame) -> DataFrame:
         return a.unionByName(
@@ -1503,15 +1517,36 @@ class ManifestParquetSink(MergeSink):
         self._insert(name, batch)
 
     def insert_with_horizon(
-        self, name: str, batch: DataFrame | None, upto: int
+        self,
+        name: str,
+        batch: DataFrame | None,
+        upto: int,
+        since: int | None = None,
     ) -> None:
         """``insert_if_absent`` that also records ``upto`` — the source
         snapshot an incremental consumer has folded to — in the SAME
         commit's manifest, so a fold and its horizon land atomically
         in one table (read back by ``horizon``). ``batch=None``
         commits a zero-row segment carrying only the horizon: a fold
-        with nothing to add, e.g. a rebase onto an emptied source."""
-        self._insert(name, batch, upto=upto)
+        with nothing to add, e.g. a rebase onto an emptied source.
+
+        Contract: ``batch`` is unique on the table key (the caller
+        aggregates on it — ``operators.etl.MaintainedAggregate``'s
+        partials are grouped by their snapshot, positives by admission
+        snapshot and negatives by tombstone snapshot, two disjoint
+        sets), so it is not deduplicated here.
+
+        ``since`` is the horizon the fold started from (None: from the
+        beginning). Every key of a fold over ``(since, upto]`` carries
+        a snapshot in that window, and a row with such a key can only
+        have been committed by a commit recording a horizon at or
+        above it. So when the commit attempt's own listing still shows
+        ``horizon == since``, no row of the table can collide and the
+        attempt skips the seen-side read and anti-join. Otherwise — no
+        ``since`` (first fold, rebase, a table with no recorded
+        horizon), or a concurrent refresher has moved the horizon —
+        the anti-join runs as for ``insert_if_absent``."""
+        self._insert(name, batch, upto=upto, since=since, dedup=False)
 
     def horizon(self, name: str) -> int | None:
         """The largest ``upto`` recorded by any committed manifest of
@@ -1535,12 +1570,47 @@ class ManifestParquetSink(MergeSink):
         ]
         return max(marks, default=None)
 
+    def _live_schema(
+        self,
+        name: str,
+        live: list[tuple[int, str, list[int] | None]],
+        tombs: list[tuple[int, str, list[str]]],
+    ) -> T.StructType:
+        """The schema ``_read_live(name, live, tombs)`` returns, taken
+        from the segment manifests (no read plan, no Spark job) when
+        every segment recorded the same one — compacted segments'
+        ``_snapshot`` column aside, which the live read drops — else
+        from the read itself."""
+        first = None
+        if not self.allow_schema_evolution:
+            for _, seg, _c in live:
+                rec = self._manifest_meta(seg).get("schema")
+                if rec is None:
+                    first = None
+                    break
+                fields = [f for f in rec["fields"] if f["name"] != "_snapshot"]
+                if first is not None and fields != first:
+                    first = None
+                    break
+                first = fields
+        if first is None:
+            return self._read_live(name, live, tombs).schema
+        return T.StructType.fromJson({"type": "struct", "fields": first})
+
     def _insert(
-        self, name: str, batch: DataFrame | None, upto: int | None = None
+        self,
+        name: str,
+        batch: DataFrame | None,
+        upto: int | None = None,
+        since: int | None = None,
+        dedup: bool = True,
     ) -> None:
         """The insert-if-absent core behind ``insert_if_absent`` and
-        ``insert_with_horizon``: anti-join, stage, OCC publish, then
-        the auto-maintenance policy."""
+        ``insert_with_horizon`` (which passes ``dedup=False`` and its
+        ``since``): anti-join, stage, OCC publish, then the
+        auto-maintenance policy. A batch that admits no row into a
+        table with live data commits a zero-file segment: the
+        snapshot is recorded, and no scan opens an empty file."""
         import shutil
 
         # deferred-deletion GC first (see _gc_superseded): dirs a
@@ -1555,32 +1625,43 @@ class ManifestParquetSink(MergeSink):
                     f"batch for table {name!r} omits key columns "
                     f"{missing_keys} — keys cannot evolve away"
                 )
-            base = batch.dropDuplicates(key)
+            base = batch.dropDuplicates(key) if dedup else batch
         while True:
             # one OCC attempt: anti-join against exactly the segments
             # of THIS listing, stage, then try to publish at next.
             # Tombstones apply to the visibility read, so a deleted
             # key is genuinely absent and RE-ADMITS here (its new row's
             # snapshot is above every tombstone that names it).
-            live, tombs, _, nxt = self._split_live(name)
+            listing = self._list_committed(name)
+            live, tombs, _, nxt = self._split_live(name, listing)
             incoming = base
-            existing = None
-            if base is not None:
-                existing = self._read_live(name, live, tombs)
-            if existing is not None:
-                # no dropDuplicates on the seen side: a left-anti join
-                # is indifferent to duplicate right-side keys, and the
-                # dedup would shuffle the whole accumulated key set
-                seen = existing.select(
-                    *[F.col(k).alias(f"__seen_{k}") for k in key]
-                )
-                cond = F.lit(True)
-                for k in key:
-                    cond = cond & F.col(k).eqNullSafe(F.col(f"__seen_{k}"))
-                incoming = incoming.join(seen, cond, "left_anti")
-                incoming = self._align_schema(name, incoming, existing)
+            if base is not None and live:
+                if since is not None and (
+                    self._carry_upto(listing[0], None) == since
+                ):
+                    # no committed row can collide: see insert_with_horizon
+                    schema = self._live_schema(name, live, tombs)
+                else:
+                    existing = self._read_live(name, live, tombs)
+                    schema = existing.schema
+                    # no dropDuplicates on the seen side: a left-anti
+                    # join is indifferent to duplicate right-side keys,
+                    # and the dedup would shuffle the whole accumulated
+                    # key set
+                    seen = existing.select(
+                        *[F.col(k).alias(f"__seen_{k}") for k in key]
+                    )
+                    cond = F.lit(True)
+                    for k in key:
+                        cond = cond & F.col(k).eqNullSafe(
+                            F.col(f"__seen_{k}")
+                        )
+                    incoming = incoming.join(seen, cond, "left_anti")
+                incoming = self._align_schema(name, incoming, schema)
             try:
-                stage = self._stage_segment(name, incoming, upto=upto)
+                stage = self._stage_segment(
+                    name, incoming, upto=upto, drop_if_empty=bool(live)
+                )
             except Exception as exc:
                 if not self._is_vanished_input(exc):
                     raise

@@ -14,6 +14,14 @@ cheaper path must keep:
   without refolding a window;
 - a manifest never undercounts ``rows``: an unreadable footer omits
   the field and the refresh still folds the batch;
+- a steady-state streaming micro-batch (typed batch, fact over the
+  pinned master lookups, aggregate refresh) stays within 12 Spark
+  jobs; the aggregate partials shuffle once and skip the seen-side
+  anti-join while the horizon is unmoved — yet still anti-join after
+  a racing refresh or on a table with no recorded horizon; and the
+  stream over pinned lookups equals one batch load without them;
+- a replay that admits nothing commits a zero-file segment, while a
+  first empty insert and ``truncate`` stay readable;
 - ``SPARK_GRAFT_SHUFFLE_PARTITIONS=""`` reads as unset.
 """
 
@@ -22,13 +30,18 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.operators.etl import (
     QUARTERLY_AGG_TABLE,
+    build_fact,
+    master_lookups,
     quarterly_maintained,
+    quarterly_sales_serve,
+    refresh_quarterly_agg,
     warehouse_for,
 )
 from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.operators.sinks import (
@@ -36,6 +49,14 @@ from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakista
 )
 from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.session import (
     initial_shuffle_partitions,
+)
+from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.sources.csv_inputs import (
+    TRANSACTIONS_SCHEMA,
+    read_transactions,
+)
+from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.streaming.pipeline import (
+    _typed,
+    stream_etl,
 )
 
 FACT_SCHEMA = (
@@ -388,3 +409,271 @@ def test_initial_shuffle_partitions_env(monkeypatch, env, explicit, want):
     else:
         monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", env)
     assert initial_shuffle_partitions(explicit, 4) == want
+
+
+# ------------------------------------------- the lean micro-batch path
+
+
+def _pinned_lookups(products, customers):
+    """The stream's pinned broadcast side (see streaming.pipeline)."""
+    return tuple(
+        df.localCheckpoint(eager=True)
+        for df in master_lookups(products, customers)
+    )
+
+
+def _raw_lines(spark, lo: int, hi: int):
+    """Raw (string) transaction lines as the stream source delivers
+    them: every order twice (an exact duplicate) plus one invalid
+    line."""
+    rows = []
+    for i in range(lo, hi):
+        line = (f"O{i}", f"2019-{1 + i % 12:02d}-0{1 + i % 9} 1{i % 10}:00:00",
+                f"P{i % 6}", str(1 + i % 4), f"C{i % 4}", f"T{i}")
+        rows += [line, line]
+    rows.append((f"O{hi}", "garbage", "P1", "2", "C1", "T0"))
+    return spark.createDataFrame(rows, TRANSACTIONS_SCHEMA)
+
+
+def test_steady_state_micro_batch_job_budget(spark, tmp_path):
+    wh = warehouse_for(spark, str(tmp_path), "manifest")
+    products, customers = _masters(spark)
+    lookups = _pinned_lookups(products, customers)
+
+    def micro_batch(lo, hi, first):
+        typed = _typed(_raw_lines(spark, lo, hi))
+        assert not typed.isEmpty()
+        wh.load_batch(
+            typed, products, customers, skip_dims=not first, lookups=lookups
+        )
+        refresh_quarterly_agg(wh)
+
+    micro_batch(0, 20, True)
+    _, jobs = _jobs(spark, lambda: micro_batch(20, 40, False))
+    # the parent launched 17: two master dedup shuffles, the typed
+    # batch's exact-line dedup, the partials' second shuffle and the
+    # aggregate's seen-side broadcast are gone
+    assert jobs <= 12, f"steady-state micro-batch launched {jobs} jobs"
+    fact = wh.read("sales_fact")
+    assert fact.count() == 40
+    served = quarterly_sales_serve(wh).agg(F.sum("total_quarterly_quantity"))
+    assert served.first()[0] == fact.agg(F.sum("quantity_ordered")).first()[0]
+
+
+def _exchanges(df) -> list[str]:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.findall(r"\w*Exchange \w+\(?[\w#]*", plan)
+
+
+def test_agg_partials_staged_plan_has_one_exchange(
+    spark, tmp_path, monkeypatch
+):
+    sink = _fact_sink(spark, tmp_path)
+    ma = quarterly_maintained(sink)
+    sink.insert_if_absent("sales_fact", _fact(spark, 0, 12))
+    ma.refresh()
+    sink.insert_if_absent("sales_fact", _fact(spark, 12, 30))
+    staged = []
+    real = sink._stage_segment
+
+    def spy(name, df, *a, **k):
+        if name == QUARTERLY_AGG_TABLE:
+            staged.append(_exchanges(df))
+        return real(name, df, *a, **k)
+
+    monkeypatch.setattr(sink, "_stage_segment", spy)
+    ma.refresh()
+    # the partials' groupBy is the only exchange: no dedup shuffle on
+    # the key, no broadcast of the seen side
+    assert [len(x) for x in staged] == [1], staged
+    assert _served(ma) == _recomputed(sink.read("sales_fact"))
+
+
+def test_fact_build_over_pinned_lookups_shuffles_no_master(spark):
+    products, customers = _masters(spark)
+    tx = _transactions(spark, 0, 12, dt.datetime(2019, 1, 1))
+    derived = _exchanges(build_fact(tx, products, customers))
+    pinned = _exchanges(
+        build_fact(
+            tx, products, customers,
+            lookups=_pinned_lookups(products, customers),
+        )
+    )
+    assert any("(product_id" in x for x in derived), derived
+    assert any("(customer_id" in x for x in derived), derived
+    # only the broadcasts and the window's shuffle on the fact key
+    shuffles = [x for x in pinned if x.startswith("Exchange ")]
+    assert len(shuffles) == 1 and "(order_id" in shuffles[0], pinned
+    assert not any(
+        "(product_id" in x or "(customer_id" in x for x in shuffles
+    ), pinned
+
+
+def test_stream_with_pinned_lookups_equals_one_batch(spark, tmp_path):
+    products, customers = _masters(spark)
+    # a duplicated product id (same price, supplier, store; the
+    # lookups must collapse it)
+    products = products.unionByName(
+        products.where("product_id = 'P1'").withColumn(
+            "product_name", F.lit("prod1 (dup)")
+        )
+    )
+    header = "order_id,order_date,product_id,quantity,customer_id,time_id\n"
+    tx_dir = tmp_path / "tx"
+    tx_dir.mkdir()
+    files = []
+    for f in range(3):
+        lines = [",".join(r) for r in _raw_lines(spark, 10 * f, 10 * f + 10).collect()]
+        lines.insert(3, "bad-order,2019-01-01 10:00:00,P1,notanint,C1,T1")
+        files.append(header + "\n".join(lines) + "\n")
+    files.append(files[1])  # a re-delivered file, verbatim
+    for i, body in enumerate(files):
+        (tx_dir / f"tx_{i}.csv").write_text(body)
+    q = stream_etl(
+        spark, str(tx_dir), str(tmp_path / "wh_stream"),
+        str(tmp_path / "ckpt"), products, customers,
+        maintain_quarterly_agg=True, max_files_per_trigger=1,
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None
+    stream_wh = warehouse_for(spark, str(tmp_path / "wh_stream"))
+    assert len(stream_wh.snapshots("sales_fact")) == 4
+
+    batch_wh = warehouse_for(spark, str(tmp_path / "wh_batch"))
+    batch_wh.load_batch(
+        read_transactions(spark, str(tx_dir)), products, customers
+    )
+    refresh_quarterly_agg(batch_wh)
+
+    def answers(wh):
+        return {
+            "sales_fact": _rows(wh.read("sales_fact")),
+            "time_dimension": _rows(wh.read("time_dimension")),
+            "served": _rows(quarterly_sales_serve(wh, wh.read("store"))),
+        }
+
+    got, want = answers(stream_wh), answers(batch_wh)
+    assert len(want["sales_fact"]) == 30
+    assert got == want
+
+
+# ------------------------------------------- the aggregate's horizon short-cut
+
+
+def test_horizon_shortcut_yields_to_a_racing_refresh(
+    spark, tmp_path, monkeypatch
+):
+    """A second refresher commits between an attempt's listing and its
+    publish: the attempt loses the number, re-lists, sees the moved
+    horizon and anti-joins — nothing is folded twice."""
+    sink = _fact_sink(spark, tmp_path)
+    ma = quarterly_maintained(sink)
+    sink.insert_if_absent("sales_fact", _fact(spark, 0, 12))
+    ma.refresh()
+    sink.insert_if_absent("sales_fact", _fact(spark, 12, 30))
+    real = sink._publish
+    raced = []
+    reads = []
+    real_read = sink._read_live
+
+    def racing_publish(name, stage, num):
+        if name == QUARTERLY_AGG_TABLE and not raced:
+            raced.append(num)
+            assert quarterly_maintained(sink).refresh() is not None
+        return real(name, stage, num)
+
+    def read_spy(name, *a, **k):
+        reads.append(name)
+        return real_read(name, *a, **k)
+
+    monkeypatch.setattr(sink, "_publish", racing_publish)
+    monkeypatch.setattr(sink, "_read_live", read_spy)
+    latest = ma.refresh()
+    assert raced and latest == sink.snapshots("sales_fact")[-1]
+    # the racer took the first attempt's number; the retry anti-joined
+    assert sink.snapshots(QUARTERLY_AGG_TABLE) == [0, 1, 2]
+    assert QUARTERLY_AGG_TABLE in reads
+    assert _served(ma) == _recomputed(sink.read("sales_fact"))
+    n = sink.read(QUARTERLY_AGG_TABLE).agg(F.sum("n_rows")).first()[0]
+    assert n == 30
+
+
+def test_refresh_of_legacy_agg_without_horizon_still_anti_joins(
+    spark, tmp_path, monkeypatch
+):
+    sink = _fact_sink(spark, tmp_path)
+    ma = quarterly_maintained(sink)
+    sink.insert_if_absent("sales_fact", _fact(spark, 0, 12))
+    ma.refresh()
+    # a table written before the horizon moved into the manifests
+    agg_dir = tmp_path / QUARTERLY_AGG_TABLE
+    for d in os.listdir(agg_dir):
+        p = agg_dir / d / "_COMMITTED.json"
+        if p.exists():
+            meta = json.loads(p.read_text())
+            assert meta.pop("upto", None) is not None
+            p.write_text(json.dumps(meta))
+    assert sink.horizon(QUARTERLY_AGG_TABLE) is None
+    sink.insert_if_absent("sales_fact", _fact(spark, 12, 30))
+    reads = []
+    real_read = sink._read_live
+
+    def read_spy(name, *a, **k):
+        reads.append(name)
+        return real_read(name, *a, **k)
+
+    monkeypatch.setattr(sink, "_read_live", read_spy)
+    assert ma.refresh() == sink.snapshots("sales_fact")[-1]
+    assert QUARTERLY_AGG_TABLE in reads
+    assert _served(ma) == _recomputed(sink.read("sales_fact"))
+    n = sink.read(QUARTERLY_AGG_TABLE).agg(F.sum("n_rows")).first()[0]
+    assert n == 30
+
+
+# ------------------------------------------------ replay commits
+
+
+@pytest.mark.parametrize("protocol", ["rename", "objectstore"])
+def test_full_replay_commits_zero_file_segment(spark, tmp_path, protocol):
+    sink = make_sink(
+        spark, str(tmp_path), keys={"t": ["k"]}, backend="manifest",
+        commit_protocol=protocol,
+    )
+    mk = lambda rows: spark.createDataFrame(rows, "k long, v string")
+    batch = mk([(i, f"v{i}") for i in range(10)])
+    sink.insert_if_absent("t", batch)
+    live = sink._segments("t")[0]
+    want = _rows(sink.read("t"))
+    sink.insert_if_absent("t", batch)  # full replay: admits nothing
+    assert sink._segments("t")[0] == live
+    assert sink.snapshots("t") == [0, 1]
+    rows, _ = sink._list_committed("t")
+    replay = rows[-1]
+    assert replay[0] == 1 and replay[2]["files"] == [] and replay[2]["rows"] == 0
+    assert not [f for f in os.listdir(replay[1]) if f.endswith(".parquet")]
+    assert _rows(sink.read_at("t", 1)) == want
+    assert sink.window_admission_rows("t", 0, 1) == 0
+    assert _rows(sink.read("t")) == want
+    # a later batch still admits only its new keys
+    sink.insert_if_absent("t", mk([(9, "x"), (10, "v10")]))
+    assert sink.window_admission_rows("t", 1, 2) == 1
+    assert _rows(sink.read("t")) == sorted(want + [(10, "v10")])
+
+
+def test_empty_first_insert_and_truncate_stay_readable(spark, tmp_path):
+    sink = make_sink(spark, str(tmp_path), keys={"t": ["k"]}, backend="manifest")
+    mk = lambda rows: spark.createDataFrame(rows, "k long, v string")
+    # a first insert of an empty batch: readable, with its schema
+    sink.insert_if_absent("t", mk([]))
+    first = sink.read("t")
+    assert first is not None and first.count() == 0
+    assert first.columns == ["k", "v"]
+    sink.insert_if_absent("t", mk([(1, "a")]))
+    sink.truncate("t")
+    # truncate's covering segment: an empty table that still reads
+    empty = sink.read("t")
+    assert empty is not None and empty.count() == 0
+    n_live = len(sink._segments("t")[0])
+    sink.insert_if_absent("t", mk([]))  # admits nothing: zero-file
+    assert len(sink._segments("t")[0]) == n_live
+    assert sink.read("t").count() == 0
