@@ -611,10 +611,8 @@ def warehouse_for(
     backend: "manifest" (default), "delta", or "auto" (delta when
     importable, else manifest). ``auto_compact_segments`` and
     ``sink_kwargs`` are manifest-only options
-    (``operators.sinks.MANIFEST_OPTIONS``, e.g.
-    ``commit_protocol="objectstore"``, ``compact_async=True``,
-    ``tier_factor``, ``stats_cols``, ``allow_schema_evolution``),
-    validated by ``operators.sinks.manifest_options`` exactly as
+    (``operators.sinks.MANIFEST_OPTIONS``, e.g. ``tier_factor``,
+    ``stats_cols``, ``allow_schema_evolution``), validated by ``operators.sinks.manifest_options`` exactly as
     ``make_sink`` validates them."""
     backend = resolve_backend(backend)
     options = manifest_options(

@@ -18,7 +18,9 @@ Two physical backends implement it (``BACKENDS``):
   its segment number; two concurrent writers serialize without a
   coordinator (the loser re-reads the now-visible segments, re-runs
   its anti-join, and retries with the next number), and a crashed
-  batch is an invisible orphan instead of a half-visible table. No
+  batch is an invisible orphan instead of a half-visible table.
+  Compactions and deletes commit through the same rename, and
+  auto-compaction runs inline in the insert that triggers it. No
   optional dependency, so the transactional commit semantics are
   tested in every environment.
 - ``DeltaMergeSink`` (``"delta"``): the same contract as one atomic
@@ -282,19 +284,6 @@ class ManifestParquetSink(MergeSink):
     concurrent writers serialize without a coordinator and
     first-writer-wins still holds per key.
 
-    COMMIT-PRIMITIVE SEAM (``commit_protocol``): ``"rename"``
-    (default) commits by POSIX exclusive directory rename —
-    atomic-exclusive on local/NFS/HDFS filesystems. ``"objectstore"``
-    assumes NO atomic rename (S3/GCS): data is written once at its
-    permanent content-addressed directory and never moved; the commit
-    point is create-if-absent of the ``seg_<n>.json`` manifest OBJECT
-    (``O_CREAT|O_EXCL`` here; on S3 a conditional
-    ``PUT If-None-Match: *``, on GCS ``x-goog-if-generation-match:
-    0``). Everything above the primitive — OCC retry, anti-join
-    visibility, compaction covers — is protocol-independent, and the
-    racing-writers/racing-compaction suite runs against BOTH
-    primitives (tests/test_sinks.py).
-
     Besides the file list, each manifest records the segment's read
     schema (readers pass it to Spark instead of inferring it from a
     footer, one Spark job per read saved) and, for commits made
@@ -313,8 +302,8 @@ class ManifestParquetSink(MergeSink):
     whose manifest lists the ``covers`` snapshot numbers — so all
     historical ``snapshots()``/``read_at()``/``added_between()``
     answers are preserved bit-for-bit while the read path drops from
-    O(batches) directories to O(tiers). The covering manifest
-    write is the commit point (covered dirs become invisible the
+    O(batches) directories to O(tiers). Publishing the covering
+    segment is the commit point (covered dirs become invisible the
     instant it lands, deleted afterwards as cleanup), keeping the
     crash-atomicity story intact.
     """
@@ -342,8 +331,7 @@ class ManifestParquetSink(MergeSink):
     # answer to a takedown QUEUE: each delete commits O(keys) now,
     # and the O(table) rewrite is paid once per `bound` deletes
     # instead of per delete. Checked after every tombstone delete and
-    # every insert; honors compact_async and the failure breaker like
-    # the segment-count policy.
+    # every insert, inline like the segment-count policy.
     materialize_tombstones_after: int | None = None
 
     # Size-tiered merge aggressiveness: a next-older segment joins
@@ -351,22 +339,6 @@ class ManifestParquetSink(MergeSink):
     # tail's accumulated bytes. 2.0 = classic geometric tiers; larger
     # values merge deeper (fewer live segments, more rewrite bytes).
     tier_factor: float = 2.0
-
-    # When True, the auto-compaction rewrite runs on a background
-    # daemon thread instead of inline in the triggering
-    # ``insert_if_absent`` — micro-batch latency stays bounded while
-    # the rewrite proceeds; the OCC publish loop absorbs the
-    # ingest/compaction race (proven by the racing-compaction tests,
-    # which hold for any interleaving). One background compaction per
-    # table at a time; ``wait_for_compactions()`` joins them (tests /
-    # orderly shutdown).
-    compact_async: bool = False
-
-    # Commit primitive: "rename" (POSIX exclusive dir rename) or
-    # "objectstore" (no rename; create-if-absent manifest object =
-    # S3 conditional PUT / GCS generation-match 0). See class
-    # docstring.
-    commit_protocol: str = "rename"
 
     # Zone maps: table name -> columns whose per-segment [min, max]
     # is recorded in the committing manifest, harvested from the
@@ -377,10 +349,13 @@ class ManifestParquetSink(MergeSink):
     # skipping at segment granularity. On an event-time-keyed stream
     # (each micro-batch covers a narrow timestamp/id band) a range
     # query reads O(matching segments) instead of O(all segments).
-    # Columns with non-JSON-native footer stats (timestamps, nested)
-    # and hive-partition columns (their values live in directory
-    # names, not footers) record no stats and are simply never pruned
-    # on — conservative, never incorrect.
+    # Timestamp and date stats are recorded as fixed-width ISO
+    # strings, and ``scan`` reads datetime, date and string bounds on
+    # such columns as times (``_zone_bound``). Columns with other
+    # non-JSON-native footer stats (nested) and hive-partition columns
+    # (their values live in directory names, not footers) record no
+    # stats and are simply never pruned on — conservative, never
+    # incorrect.
     stats_cols: dict[str, list[str]] = field(default_factory=dict)
 
     # Schema evolution (ADD-column only, the Delta/Iceberg default):
@@ -400,52 +375,17 @@ class ManifestParquetSink(MergeSink):
     # segment).
     allow_schema_evolution: bool = False
 
-    # Background-compaction failure policy: after this many
-    # CONSECUTIVE background failures on one table, auto-compaction
-    # for that table stops re-triggering (a persistently failing
-    # rewrite — permissions, disk-full — must not loop invisibly
-    # forever). A successful compaction (background or an explicit
-    # ``compact()`` call) resets the counter and re-arms the policy.
-    compact_error_limit: int = 5
-
-    # Optional JSONL metrics feed (one line per background-compaction
-    # failure / recovery) — the storage-layer counterpart of
-    # streaming.monitor's per-batch feed; None = in-memory counters
-    # only (always available via ``compaction_errors``).
-    metrics_path: str | None = None
-
-    # name -> running background compaction thread (compact_async)
-    _compact_threads: dict = field(
-        default_factory=dict, repr=False, compare=False
-    )
-
-    # name -> {"consecutive", "total", "last_error", "disabled"} for
-    # background compactions (see _compact_quietly)
-    _compact_errors: dict = field(
-        default_factory=dict, repr=False, compare=False
-    )
-
     def _table_dir(self, name: str) -> str:
         return self.path(name)
-
-    def _commit_obj(self, name: str, num: int) -> str:
-        """The objectstore protocol's commit-manifest object path."""
-        return os.path.join(self._table_dir(name), f"seg_{num}.json")
 
     def _list_committed(
         self, name: str
     ) -> tuple[list[tuple[int, str, dict]], set[int]]:
-        """Protocol-aware listing: (committed (number, data_dir,
-        manifest meta) ascending, ALL claimed numbers — committed
-        plus crashed/half-written claims, which must never be
-        re-issued).
-
-        rename protocol: a segment is ``seg_<n>/`` holding its data
-        files and ``_COMMITTED.json``; a dir without a readable
-        manifest is a crashed claim (invisible). objectstore
-        protocol: a segment is the ``seg_<n>.json`` commit object
-        pointing at its immutable content-addressed data directory; a
-        present-but-unparseable object is a crashed claim."""
+        """(committed (number, segment dir, manifest meta) ascending,
+        ALL claimed numbers — committed plus crashed claims, which
+        must never be re-issued). A segment is ``seg_<n>/`` holding
+        its data files and ``_COMMITTED.json``; a dir without a
+        readable manifest is a crashed claim (invisible)."""
         import json
 
         tdir = self._table_dir(name)
@@ -453,38 +393,19 @@ class ManifestParquetSink(MergeSink):
         claimed: set[int] = set()
         if not os.path.isdir(tdir):
             return committed, claimed
-        if self.commit_protocol == "rename":
-            for d in os.listdir(tdir):
-                if not (d.startswith("seg_") and d[4:].isdigit()):
-                    continue
-                n = int(d[4:])
-                p = os.path.join(tdir, d)
-                claimed.add(n)
-                try:
-                    with open(os.path.join(p, "_COMMITTED.json")) as fh:
-                        meta = json.load(fh)
-                    meta["files"]
-                except (OSError, ValueError, KeyError):
-                    continue  # uncommitted / crashed — invisible
-                committed.append((n, p, meta))
-        else:
-            for d in os.listdir(tdir):
-                if not (
-                    d.startswith("seg_")
-                    and d.endswith(".json")
-                    and d[4:-5].isdigit()
-                ):
-                    continue
-                n = int(d[4:-5])
-                claimed.add(n)
-                try:
-                    with open(os.path.join(tdir, d)) as fh:
-                        meta = json.load(fh)
-                    meta["files"]
-                    p = os.path.join(tdir, meta["dir"])
-                except (OSError, ValueError, KeyError):
-                    continue  # half-written commit object — invisible
-                committed.append((n, p, meta))
+        for d in os.listdir(tdir):
+            if not (d.startswith("seg_") and d[4:].isdigit()):
+                continue
+            n = int(d[4:])
+            p = os.path.join(tdir, d)
+            claimed.add(n)
+            try:
+                with open(os.path.join(p, "_COMMITTED.json")) as fh:
+                    meta = json.load(fh)
+                meta["files"]
+            except (OSError, ValueError, KeyError):
+                continue  # uncommitted / crashed — invisible
+            committed.append((n, p, meta))
         committed.sort()
         return committed, claimed
 
@@ -608,12 +529,10 @@ class ManifestParquetSink(MergeSink):
         """Write ``df`` (hive-partitioned when configured) plus its
         complete ``_COMMITTED.json`` manifest into a fresh staging
         directory and return the staging path. The directory is a
-        fully-formed segment — publishing it is a single rename
-        (rename protocol) or a create-if-absent of the commit object
-        (objectstore protocol, where this directory is ALREADY at its
-        permanent content-addressed location and is never moved).
-        ``df=None`` stages a zero-file segment: a manifest-only commit
-        (it carries ``upto`` — see ``insert_with_horizon``). With
+        fully-formed segment — publishing it is a single rename (see
+        ``_publish``). ``df=None`` stages a zero-file segment: a
+        manifest-only commit (it carries ``upto`` — see
+        ``insert_with_horizon``). With
         ``drop_if_empty``, a write the footers prove held 0 rows is
         turned into one too (its empty part-files are deleted), so
         scans never open it.
@@ -633,10 +552,9 @@ class ManifestParquetSink(MergeSink):
         import shutil
         import uuid
 
-        tdir = self._table_dir(name)
-        prefix = "_stage_" if self.commit_protocol == "rename" else "data_"
         stage = os.path.join(
-            tdir, f"{prefix}{os.getpid()}_{uuid.uuid4().hex[:12]}"
+            self._table_dir(name),
+            f"_stage_{os.getpid()}_{uuid.uuid4().hex[:12]}",
         )
         # tombstone segments hold the bare key relation — never the
         # table's hive layout (the partition columns may not exist)
@@ -728,6 +646,75 @@ class ManifestParquetSink(MergeSink):
         if isinstance(v, _dt.date):
             return v.strftime("%Y-%m-%d")
         return None
+
+    @staticmethod
+    def _zone_bound(v, typ, upper: bool):
+        """A caller's range bound (``upper`` or lower) in the zone-map
+        form of a column of Spark type ``typ`` (its JSON name in the
+        manifest-recorded schema; None when unknown). On a timestamp
+        or date column a ``date`` bound is midnight and a string bound
+        is parsed as an ISO date or date-time (``"2024-01-05"``,
+        ``"2024-01-05 10:00:00"``, ``"2024-01-05T10:00:00"``), the way
+        the scan's filter casts it, so it orders against the stats'
+        fixed-width ISO strings by time instead of as text. On a date
+        column the filter casts a string bound to its date but widens
+        the column to midnight against a date-time bound, so a lower
+        date-time bound past midnight starts at the next day. On any
+        other column, or one of unknown type (a manifest without a
+        recorded schema), the bound keeps its ``_stat_value`` form.
+        Raises ValueError when the bound does not parse — the caller
+        then never prunes on the column."""
+        import datetime as _dt
+
+        if typ in ("timestamp", "timestamp_ntz", "date"):
+            text = isinstance(v, str)
+            if text:
+                v = _dt.datetime.fromisoformat(v)
+            elif isinstance(v, _dt.date) and not isinstance(
+                v, _dt.datetime
+            ):
+                v = _dt.datetime.combine(v, _dt.time())
+            if not isinstance(v, _dt.datetime):
+                raise ValueError(f"{v!r} is not a {typ} bound")
+            iso = ManifestParquetSink._stat_value(v)
+            if typ != "date":
+                return iso
+            day = _dt.date.fromisoformat(iso[:10])
+            if not (upper or text or iso.endswith("T00:00:00.000000")):
+                day += _dt.timedelta(days=1)
+            return day.isoformat()
+        out = ManifestParquetSink._stat_value(v)
+        if out is None:
+            raise ValueError(f"{v!r} has no zone-map form")
+        return out
+
+    def _zone_ranges(
+        self,
+        live: list[tuple[int, str, list[int] | None]],
+        ranges: dict[str, tuple],
+    ) -> dict[str, tuple]:
+        """``ranges`` with every bound in its column's zone-map form
+        (``_zone_bound``; column types from the live segments'
+        recorded schemas). A column with a bound that does not parse
+        is left out, so no segment or file is pruned on it."""
+        types: dict = {}
+        for _, seg, _ in live:
+            if set(ranges) <= set(types):
+                break
+            rec = self._manifest_meta(seg).get("schema") or {}
+            for f in rec.get("fields", []):
+                types.setdefault(f["name"], f["type"])
+        zones = {}
+        for c, bounds in ranges.items():
+            try:
+                zones[c] = tuple(
+                    None if b is None
+                    else self._zone_bound(b, types.get(c), upper)
+                    for b, upper in zip(bounds, (False, True))
+                )
+            except ValueError:
+                continue
+        return zones
 
     @staticmethod
     def _footer_stats(
@@ -851,12 +838,12 @@ class ManifestParquetSink(MergeSink):
         ranges: dict[str, tuple],
     ) -> bool:
         """False only when some predicate column's recorded [min, max]
-        is PROVABLY disjoint from its queried range — unknown stats
-        (None) always scan (conservative, never incorrect). A recorded
-        ``[]`` means the unit holds no non-null value for the column:
+        is PROVABLY disjoint from its queried range (bounds already in
+        zone-map form, see ``_zone_ranges``) — unknown stats (None)
+        always scan (conservative, never incorrect). A recorded ``[]``
+        means the unit holds no non-null value for the column:
         prunable by any BOUNDED range (NULL never satisfies one), read
         for a degenerate unbounded one."""
-        norm = ManifestParquetSink._stat_value
         for c, (qlo, qhi) in ranges.items():
             rec = stats.get(c)
             if rec is None:
@@ -866,8 +853,6 @@ class ManifestParquetSink(MergeSink):
                     return False
                 continue
             mn, mx = rec
-            qlo = None if qlo is None else norm(qlo)
-            qhi = None if qhi is None else norm(qhi)
             if qlo is not None and mx < qlo:
                 return False
             if qhi is not None and mn > qhi:
@@ -889,12 +874,13 @@ class ManifestParquetSink(MergeSink):
         (provably-empty result without touching one data file)."""
         live, tombs, _, _ = self._split_live(name)
         if ranges:
+            zones = self._zone_ranges(live, ranges)
             live = [
                 t for t in live
-                if self._may_match(self._segment_stats(t[1]), ranges)
+                if self._may_match(self._segment_stats(t[1]), zones)
             ]
         if ranges and not tombs and not self.partitioning.get(name):
-            df = self._read_pruned_files(name, live, ranges)
+            df = self._read_pruned_files(name, live, zones)
         else:
             # hive-partitioned tables keep per-segment directory reads
             # (partition pruning handles the partition columns; direct
@@ -969,9 +955,10 @@ class ManifestParquetSink(MergeSink):
         """(live segments, segments a ``scan`` with ``ranges`` would
         read) — the zone-map effectiveness evidence scalecheck pins."""
         live, _, _ = self._segments(name)
+        zones = self._zone_ranges(live, ranges)
         kept = [
             t for t in live
-            if self._may_match(self._segment_stats(t[1]), ranges)
+            if self._may_match(self._segment_stats(t[1]), zones)
         ]
         return len(live), len(kept)
 
@@ -982,11 +969,12 @@ class ManifestParquetSink(MergeSink):
         open) — the FILE-granular twin of ``prune_report``, the number
         a clustered compaction drives toward O(matching bands)."""
         live, _, _ = self._segments(name)
+        zones = self._zone_ranges(live, ranges)
         live = [
             t for t in live
-            if self._may_match(self._segment_stats(t[1]), ranges)
+            if self._may_match(self._segment_stats(t[1]), zones)
         ]
-        plain, compacted, _ = self._pruned_paths(live, ranges)
+        plain, compacted, _ = self._pruned_paths(live, zones)
         total = 0
         for _, seg, _c in self._segments(name)[0]:
             total += len(self._manifest_meta(seg).get("files") or [])
@@ -1006,55 +994,18 @@ class ManifestParquetSink(MergeSink):
         )
 
     def _publish(self, name: str, stage: str, num: int) -> bool:
-        """Atomically publish a staged segment as snapshot ``num`` —
-        the commit-primitive seam. False when another writer already
-        owns the number (the OCC loser signal).
-
-        rename protocol: one POSIX exclusive directory rename of the
-        stage to ``seg_<num>`` — simultaneously the commit point and
-        the claim (rename onto an existing non-empty dir fails).
-        objectstore protocol: the data directory never moves; the
-        commit point is create-if-absent of the ``seg_<num>.json``
-        manifest object carrying the staged manifest plus the data
-        directory pointer. ``O_CREAT|O_EXCL`` here is the local
-        simulation of S3 ``PUT If-None-Match: *`` / GCS
-        ``x-goog-if-generation-match: 0`` — the only primitive the
-        protocol needs from a real object store."""
-        import json
-
-        if self.commit_protocol == "rename":
-            seg = os.path.join(self._table_dir(name), f"seg_{num}")
-            try:
-                os.rename(stage, seg)
-                return True
-            except OSError:
-                return False
-        meta = self._manifest_meta(stage)
-        meta["dir"] = os.path.basename(stage)
+        """Atomically publish a staged segment as snapshot ``num`` by
+        one POSIX exclusive directory rename of the stage to
+        ``seg_<num>`` — simultaneously the commit point and the claim
+        (rename onto an existing non-empty dir fails). False when
+        another writer already owns the number (the OCC loser
+        signal)."""
+        seg = os.path.join(self._table_dir(name), f"seg_{num}")
         try:
-            fd = os.open(
-                self._commit_obj(name, num),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-            )
-        except FileExistsError:
+            os.rename(stage, seg)
+            return True
+        except OSError:
             return False
-        with os.fdopen(fd, "w") as fh:
-            json.dump(meta, fh)
-        return True
-
-    def _remove_segment(self, name: str, num: int, datadir: str) -> None:
-        """Physically delete a superseded/covered segment: its data
-        directory plus — objectstore protocol — its commit object
-        (the covering manifest already carries the snapshot number in
-        ``covers``, so history survives the delete)."""
-        import shutil
-
-        shutil.rmtree(datadir, ignore_errors=True)
-        if self.commit_protocol != "rename":
-            try:
-                os.remove(self._commit_obj(name, num))
-            except OSError:
-                pass
 
     def snapshots(self, name: str) -> list[int]:
         """Committed segment numbers, ascending — every one is a
@@ -1509,8 +1460,8 @@ class ManifestParquetSink(MergeSink):
             if self._publish(name, stage, nxt):
                 break
             shutil.rmtree(stage, ignore_errors=True)
-        for n, p, _ in live + tombs:
-            self._remove_segment(name, n, p)
+        for _, p, _ in live + tombs:
+            shutil.rmtree(p, ignore_errors=True)
         return nxt
 
     def insert_if_absent(self, name: str, batch: DataFrame) -> None:
@@ -1862,10 +1813,10 @@ class ManifestParquetSink(MergeSink):
             # DELETE depends on covering every committed row).
             shutil.rmtree(stage, ignore_errors=True)
         if delete_covered:
-            for n, p, _ in live:
-                self._remove_segment(name, n, p)
-            for n, p in empty_segs:
-                self._remove_segment(name, n, p)
+            for _, p, _ in live:
+                shutil.rmtree(p, ignore_errors=True)
+            for _, p in empty_segs:
+                shutil.rmtree(p, ignore_errors=True)
         return nxt
 
     def _segment_bytes(self, seg: str) -> int:
@@ -1974,12 +1925,12 @@ class ManifestParquetSink(MergeSink):
           fast reader; subsumes the tier merge, so it wins when both
           fire).
 
-        Inline, or on a background daemon thread under
-        ``compact_async`` (bounded micro-batch latency; the OCC
-        publish loop absorbs the ingest/compaction race). Deletion of
-        covered dirs is always deferred to the next batch start
-        (``_gc_superseded``) so lazy reader plans built before the
-        merge keep their files."""
+        Runs inline in the triggering insert or delete; a failing
+        rewrite raises to that caller after the batch it follows has
+        committed, and the next insert re-evaluates the policy.
+        Deletion of covered dirs is always deferred to the next batch
+        start (``_gc_superseded``) so lazy reader plans built before
+        the merge keep their files."""
         live, tombs, _, _ = self._split_live(name)
         materialize = (
             self.materialize_tombstones_after is not None
@@ -1993,159 +1944,22 @@ class ManifestParquetSink(MergeSink):
             return
         # a materializing rewrite must be FULL (tombstones can hide
         # rows in any segment), so it ignores the tier bound
-        since = None if materialize else self._tier_since(live)
-        if not self.compact_async:
-            try:
-                self.compact(
-                    name,
-                    since=since,
-                    delete_covered=False,
-                    materialize_deletes=materialize,
-                )
-            except Exception as exc:
-                # inline failures PROPAGATE (the caller sees them) —
-                # but they still count, WITH the exception, so
-                # operators polling compaction_errors() see one
-                # coherent feed (last_error included) on both paths
-                self._record_compact_failure(name, exc)
-                raise
-            self._record_compact_success(name)
-            return
-        if self._compact_errors.get(name, {}).get("disabled"):
-            return  # circuit open: no re-trigger until a manual
-            # compact() succeeds (see _record_compact_success)
-        t = self._compact_threads.get(name)
-        if t is not None and t.is_alive():
-            return  # one background compaction per table at a time
-        import threading
-
-        t = threading.Thread(
-            target=self._compact_quietly,
-            args=(name, since, materialize),
-            daemon=True,
-            name=f"sink-compact-{name}",
-        )
-        self._compact_threads[name] = t
-        t.start()
-
-    def compaction_errors(self, name: str) -> dict:
-        """Observability for the auto-compaction policy on ``name``:
-        ``{"consecutive", "total", "last_error", "disabled"}``.
-        ``disabled=True`` means the background circuit breaker opened
-        (``compact_error_limit`` consecutive failures) and
-        auto-compaction stopped re-triggering for the table; a
-        successful explicit ``compact(name)`` closes it again."""
-        st = self._compact_errors.get(name)
-        if st is None:
-            return {
-                "consecutive": 0,
-                "total": 0,
-                "last_error": None,
-                "disabled": False,
-            }
-        return dict(st)
-
-    def _emit_metric(self, row: dict) -> None:
-        if self.metrics_path is None:
-            return
-        import json
-
-        try:
-            with open(self.metrics_path, "a") as fh:
-                fh.write(json.dumps(row, default=str) + "\n")
-        except OSError:
-            pass  # metrics must never take down the data path
-
-    def _record_compact_failure(
-        self, name: str, exc: Exception | None = None
-    ) -> None:
-        st = self._compact_errors.setdefault(
+        self.compact(
             name,
-            {
-                "consecutive": 0,
-                "total": 0,
-                "last_error": None,
-                "disabled": False,
-            },
+            since=None if materialize else self._tier_since(live),
+            delete_covered=False,
+            materialize_deletes=materialize,
         )
-        st["consecutive"] += 1
-        st["total"] += 1
-        if exc is not None:
-            st["last_error"] = f"{type(exc).__name__}: {exc}"
-        self._emit_metric(
-            {
-                "event": "compaction_failure",
-                "table": name,
-                **{k: st[k] for k in ("consecutive", "total", "last_error")},
-            }
-        )
-        if (
-            not st["disabled"]
-            and st["consecutive"] >= self.compact_error_limit
-        ):
-            st["disabled"] = True
-            import warnings
-
-            warnings.warn(
-                f"background compaction of table {name!r} failed "
-                f"{st['consecutive']} consecutive times (last: "
-                f"{st['last_error']}); auto-compaction for this table "
-                "is DISABLED until an explicit compact() succeeds — "
-                "live segment count will grow unbounded until then",
-                RuntimeWarning,
-                stacklevel=3,
-            )
-            self._emit_metric(
-                {"event": "compaction_disabled", "table": name}
-            )
-
-    def _record_compact_success(self, name: str) -> None:
-        st = self._compact_errors.get(name)
-        if st is None:
-            return
-        recovered = st["consecutive"] > 0 or st["disabled"]
-        st["consecutive"] = 0
-        st["disabled"] = False
-        if recovered:
-            self._emit_metric(
-                {"event": "compaction_recovered", "table": name}
-            )
-
-    def _compact_quietly(
-        self, name: str, since: int | None, materialize: bool = False
-    ) -> None:
-        """Background auto-compaction body: failures are COUNTED and
-        surfaced (never raised into the daemon thread): consecutive
-        failures beyond ``compact_error_limit`` open a per-table
-        circuit breaker that stops re-triggering, with one loud
-        RuntimeWarning and a JSONL metric (``metrics_path``) — the
-        round-11 fix for the silent bare-``pass`` retry loop."""
-        try:
-            self.compact(
-                name,
-                since=since,
-                delete_covered=False,
-                materialize_deletes=materialize,
-            )
-        except Exception as exc:
-            self._record_compact_failure(name, exc)
-        else:
-            self._record_compact_success(name)
-
-    def wait_for_compactions(self) -> None:
-        """Join any running background compactions (orderly shutdown
-        / deterministic tests). No-op when none are running."""
-        for t in list(self._compact_threads.values()):
-            t.join()
 
     def _gc_superseded(self, name: str) -> None:
-        """Delete on-disk segments superseded by a committed covering
-        manifest (data dirs, plus commit objects on the objectstore
-        protocol). Runs at the START of the next batch / compaction,
-        never inside the compaction that superseded them — so a lazy
-        reader plan built BEFORE a ``delete_covered=False`` compaction
-        keeps its files until the single writer moves again, instead
-        of failing recompute mid-collect."""
+        """Delete on-disk segment dirs superseded by a committed
+        covering manifest. Runs at the START of the next batch /
+        compaction, never inside the compaction that superseded them —
+        so a lazy reader plan built BEFORE a ``delete_covered=False``
+        compaction keeps its files until the single writer moves
+        again, instead of failing recompute mid-collect."""
+        import shutil
+
         committed, _ = self._list_committed(name)
         covered: set[int] = set()
         for _, _, meta in committed:
@@ -2154,7 +1968,7 @@ class ManifestParquetSink(MergeSink):
                 covered.update(covers)
         for n, p, _ in committed:
             if n in covered:
-                self._remove_segment(name, n, p)
+                shutil.rmtree(p, ignore_errors=True)
 
     @staticmethod
     def _zvalue(df: DataFrame, cols: list[str], bits: int = 16):
@@ -2483,10 +2297,10 @@ class ManifestParquetSink(MergeSink):
             # unchanged; new segments are outside the covered range):
             # only its NUMBER is stale, so retry the publish at the
             # fresh next number instead of restaging the rewrite.
-            # Without this, a background compaction under sustained
-            # ingest restages a full rewrite per lost race — measured
-            # starvation (live count grew to the whole batch count)
-            # and O(losses) wasted rewrite volume. Only a racing
+            # Without this, a compaction racing sustained ingest from
+            # another writer restages a full rewrite per lost race —
+            # measured starvation (live count grew to the whole batch
+            # count) and O(losses) wasted rewrite volume. Only a racing
             # COMPACTION that covered our targets forces a restage.
             published = False
             expiring = (
@@ -2510,18 +2324,15 @@ class ManifestParquetSink(MergeSink):
             if published:
                 break
             shutil.rmtree(stage, ignore_errors=True)
-        # a committed rewrite closes the failure circuit breaker (an
-        # explicit compact() succeeding re-arms auto-compaction)
-        self._record_compact_success(name)
         # cleanup, not commit: readers already skip these (deferred
         # to the next batch start when delete_covered=False)
         if delete_covered:
-            for n, p, _ in targets:
-                self._remove_segment(name, n, p)
-            for n, p in empty_segs:
-                self._remove_segment(name, n, p)
-            for n, p, _ in consumed_tombs:
-                self._remove_segment(name, n, p)
+            for _, p, _ in targets:
+                shutil.rmtree(p, ignore_errors=True)
+            for _, p in empty_segs:
+                shutil.rmtree(p, ignore_errors=True)
+            for _, p, _ in consumed_tombs:
+                shutil.rmtree(p, ignore_errors=True)
         return nxt
 
 
@@ -2548,11 +2359,7 @@ MANIFEST_OPTIONS = (
     "auto_compact_segments",
     "stats_cols",
     "allow_schema_evolution",
-    "commit_protocol",
-    "compact_async",
     "tier_factor",
-    "metrics_path",
-    "compact_error_limit",
     "materialize_tombstones_after",
 )
 
@@ -2583,7 +2390,7 @@ def manifest_options(backend: str, options: dict) -> dict:
     before any sink is constructed, and return the ones that are set
     (None and False mean "not set"). Rejects names that are not in
     ``MANIFEST_OPTIONS``, any set option on a backend other than
-    ``"manifest"``, and an unknown ``commit_protocol``."""
+    ``"manifest"``."""
     unknown = sorted(set(options) - set(MANIFEST_OPTIONS))
     if unknown:
         raise ValueError(
@@ -2598,12 +2405,6 @@ def manifest_options(backend: str, options: dict) -> dict:
             f"{sorted(given)} apply only to the 'manifest' backend "
             "(segment commits, compaction, zone maps, schema "
             f"evolution); got {backend!r}"
-        )
-    protocol = given.get("commit_protocol")
-    if protocol is not None and protocol not in ("rename", "objectstore"):
-        raise ValueError(
-            f"unknown commit_protocol {protocol!r}: expected "
-            "'rename' or 'objectstore'"
         )
     return given
 
@@ -2643,11 +2444,7 @@ def make_sink(
     auto_compact_segments: int | None = None,
     stats_cols: dict[str, list[str]] | None = None,
     allow_schema_evolution: bool = False,
-    commit_protocol: str | None = None,
-    compact_async: bool = False,
     tier_factor: float | None = None,
-    metrics_path: str | None = None,
-    compact_error_limit: int | None = None,
     materialize_tombstones_after: int | None = None,
 ) -> MergeSink:
     """Construct the requested sink backend.
@@ -2662,9 +2459,7 @@ def make_sink(
     ``ManifestParquetSink``), validated by ``manifest_options`` and
     rejected on delta: ``auto_compact_segments`` (inline compaction
     at a live-segment bound), ``stats_cols`` (per-segment zone maps
-    used by ``scan``), ``allow_schema_evolution``,
-    ``commit_protocol`` ("rename" | "objectstore"), ``compact_async``,
-    ``tier_factor``, ``metrics_path``, ``compact_error_limit`` and
+    used by ``scan``), ``allow_schema_evolution``, ``tier_factor`` and
     ``materialize_tombstones_after``.
     """
     backend = resolve_backend(backend)
@@ -2674,11 +2469,7 @@ def make_sink(
             "auto_compact_segments": auto_compact_segments,
             "stats_cols": dict(stats_cols) if stats_cols else None,
             "allow_schema_evolution": allow_schema_evolution,
-            "commit_protocol": commit_protocol,
-            "compact_async": compact_async,
             "tier_factor": tier_factor,
-            "metrics_path": metrics_path,
-            "compact_error_limit": compact_error_limit,
             "materialize_tombstones_after": materialize_tombstones_after,
         },
     )

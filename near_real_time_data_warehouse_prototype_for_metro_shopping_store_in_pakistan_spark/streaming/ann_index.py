@@ -89,10 +89,8 @@ def index_warehouse(
     live segments into one, preserving the cell hive layout the serve
     path partition-prunes on (``compact`` repartitions by the
     configured partition columns). ``sink_kwargs`` forwards extra
-    ``make_sink`` options (``commit_protocol="objectstore"``,
-    ``compact_async=True``, ``tier_factor``, ``stats_cols``...) so
-    deployments pick the commit primitive and compaction policy
-    without a facade fork."""
+    ``make_sink`` options (``tier_factor``, ``stats_cols``...) so
+    deployments tune the compaction policy without a facade fork."""
     return make_sink(
         spark,
         index_root,

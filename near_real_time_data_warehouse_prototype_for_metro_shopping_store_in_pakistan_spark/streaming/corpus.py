@@ -1145,8 +1145,7 @@ def stream_curate_neardup(
     no streaming state store, replays are no-ops. ``backend`` selects
     the insert-if-absent sink implementation (operators.sinks);
     ``sink_kwargs`` forwards extra ``make_sink`` options
-    (``commit_protocol="objectstore"``, ``compact_async=True``,
-    ``tier_factor``...). ``audit_rejects`` persists (doc_id, stage,
+    (``tier_factor``, ``stats_cols``...). ``audit_rejects`` persists (doc_id, stage,
     reason) for every cut doc — gate cuts, exact dups, AND near-dup
     vetoes — into ``curation_rejects`` (see ``stream_curate``)."""
     warehouse = make_sink(

@@ -732,12 +732,12 @@ def tiered_mode(spark, n_batches: int = 48, batch_rows: int = 2000) -> None:
             F.md5(F.col("id").cast("string")).alias("v"),
         )
 
-    def run(factor: float, compact_async: bool = False):
+    def run(factor: float):
         root = tempfile.mkdtemp(prefix="scalecheck_tiered_")
         try:
             sink = make_sink(
                 spark, root, keys={"t": ["k"]}, backend="manifest",
-                auto_compact_segments=8, compact_async=compact_async,
+                auto_compact_segments=8,
             )
             sink.tier_factor = factor
             staged_rows = []
@@ -761,7 +761,6 @@ def tiered_mode(spark, n_batches: int = 48, batch_rows: int = 2000) -> None:
                 lat.append(time.time() - tb)
                 live, _, _ = sink._segments("t")
                 max_live = max(max_live, len(live))
-            sink.wait_for_compactions()
             wall = time.time() - t0
             n = sink.read("t").count()
             assert n == n_batches * batch_rows, n
@@ -780,7 +779,6 @@ def tiered_mode(spark, n_batches: int = 48, batch_rows: int = 2000) -> None:
 
     tiered = run(2.0)
     full = run(float("inf"))
-    tiered_async = run(2.0, compact_async=True)
     assert tiered["max_live_segments"] <= 9, tiered
 
     def simulate(n, bound, factor):
@@ -808,11 +806,6 @@ def tiered_mode(spark, n_batches: int = 48, batch_rows: int = 2000) -> None:
                 "batch_rows": batch_rows,
                 "tiered": tiered,
                 "full_rewrite": full,
-                # compact_async moves the rewrite off the triggering
-                # batch: max batch latency should approach p50 while
-                # the sync policies pay a full rewrite inline on the
-                # unlucky batch
-                "tiered_async": tiered_async,
                 "rows_ratio": round(
                     tiered["rewritten_rows"] / max(full["rewritten_rows"], 1),
                     3,

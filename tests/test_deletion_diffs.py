@@ -26,9 +26,6 @@ from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakista
     ManifestParquetSink,
 )
 
-PROTOCOLS = ["rename", "objectstore"]
-
-
 def _sink(spark, root, **kw):
     return ManifestParquetSink(
         spark, str(root), keys={"t": ["k"]}, partitioning={}, **kw
@@ -43,9 +40,8 @@ def _keys(spark, ks):
     return spark.createDataFrame([(k,) for k in ks], "k long")
 
 
-@pytest.mark.parametrize("protocol", PROTOCOLS)
-def test_redactions_between_rewrite_delete(spark, tmp_path, protocol):
-    sink = _sink(spark, tmp_path, commit_protocol=protocol)
+def test_redactions_between_rewrite_delete(spark, tmp_path):
+    sink = _sink(spark, tmp_path)
     sink.insert_if_absent("t", _rows(spark, [(1, 10), (2, 20)]))  # s0
     sink.insert_if_absent("t", _rows(spark, [(3, 30)]))  # s1
     assert sink.redactions_between("t", None) == []
@@ -58,9 +54,8 @@ def test_redactions_between_rewrite_delete(spark, tmp_path, protocol):
     assert sink.redactions_between("t", None, 1) == []
 
 
-@pytest.mark.parametrize("protocol", PROTOCOLS)
-def test_redaction_marker_survives_compaction(spark, tmp_path, protocol):
-    sink = _sink(spark, tmp_path, commit_protocol=protocol)
+def test_redaction_marker_survives_compaction(spark, tmp_path):
+    sink = _sink(spark, tmp_path)
     sink.insert_if_absent("t", _rows(spark, [(1, 10), (2, 20)]))  # s0
     sink.delete_keys("t", _keys(spark, [1]), mode="rewrite")  # s1
     sink.insert_if_absent("t", _rows(spark, [(4, 40)]))  # s2
@@ -111,9 +106,8 @@ def test_plain_compact_is_not_a_redaction(spark, tmp_path):
     assert sink.redactions_between("t", None) == []
 
 
-@pytest.mark.parametrize("protocol", PROTOCOLS)
-def test_deleted_between_basic(spark, tmp_path, protocol):
-    sink = _sink(spark, tmp_path, commit_protocol=protocol)
+def test_deleted_between_basic(spark, tmp_path):
+    sink = _sink(spark, tmp_path)
     sink.insert_if_absent("t", _rows(spark, [(1, 10), (2, 20)]))  # s0
     sink.insert_if_absent("t", _rows(spark, [(3, 30)]))  # s1
     sink.delete_keys("t", _keys(spark, [2]), mode="tombstone")  # s2
@@ -162,9 +156,8 @@ def test_deleted_between_validates_snapshots(spark, tmp_path):
         sink.deleted_between("t", None, 99)
 
 
-@pytest.mark.parametrize("protocol", PROTOCOLS)
-def test_truncate(spark, tmp_path, protocol):
-    sink = _sink(spark, tmp_path, commit_protocol=protocol)
+def test_truncate(spark, tmp_path):
+    sink = _sink(spark, tmp_path)
     sink.insert_if_absent("t", _rows(spark, [(1, 10), (2, 20)]))  # s0
     sink.insert_if_absent("t", _rows(spark, [(3, 30)]))  # s1
     got = sink.truncate("t")  # s2

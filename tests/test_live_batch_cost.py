@@ -633,11 +633,9 @@ def test_refresh_of_legacy_agg_without_horizon_still_anti_joins(
 # ------------------------------------------------ replay commits
 
 
-@pytest.mark.parametrize("protocol", ["rename", "objectstore"])
-def test_full_replay_commits_zero_file_segment(spark, tmp_path, protocol):
+def test_full_replay_commits_zero_file_segment(spark, tmp_path):
     sink = make_sink(
-        spark, str(tmp_path), keys={"t": ["k"]}, backend="manifest",
-        commit_protocol=protocol,
+        spark, str(tmp_path), keys={"t": ["k"]}, backend="manifest"
     )
     mk = lambda rows: spark.createDataFrame(rows, "k long, v string")
     batch = mk([(i, f"v{i}") for i in range(10)])

@@ -2,11 +2,7 @@
 
 - size-tiered auto-compaction (no more full-table rewrite every
   `bound` batches — O(N log N) cumulative rewrite bytes),
-- async (background-thread) auto-compaction with bounded batch path,
-- the pluggable commit protocol: the same OCC/exactly-once contract
-  on a simulated OBJECT STORE (no atomic rename; create-if-absent of
-  the manifest object is the commit point — S3 conditional PUT / GCS
-  generation-match-0),
+- the OCC/exactly-once contract under racing writers,
 - _zvalue bit-budget guard (>=4 z-order columns must not touch the
   sign bit or wrap shifts mod 64),
 - read_at schema stability under schema evolution + compaction.
@@ -24,34 +20,25 @@ from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakista
     make_sink,
 )
 
-PROTOCOLS = ["rename", "objectstore"]
-
-
 def _mk(spark, *ks):
     return spark.createDataFrame([(int(k),) for k in ks], "k long")
 
 
-def _sink(spark, root, protocol="rename", **kw):
+def _sink(spark, root, **kw):
     return make_sink(
-        spark,
-        str(root),
-        keys={"t": ["k"]},
-        backend="manifest",
-        commit_protocol=protocol,
-        **kw,
+        spark, str(root), keys={"t": ["k"]}, backend="manifest", **kw
     )
 
 
 # ---------------------------------------------------------------- #
-# commit-protocol seam: the objectstore primitive                   #
+# the rename commit: snapshots, compaction, racing writers          #
 # ---------------------------------------------------------------- #
 
 
-@pytest.mark.parametrize("protocol", PROTOCOLS)
-def test_protocol_basic_contract(spark, tmp_path, protocol):
-    """insert/replay/read/snapshots/read_at/compact behave
-    identically on both commit primitives."""
-    sink = _sink(spark, tmp_path, protocol)
+def test_basic_contract(spark, tmp_path):
+    """insert/replay/read/snapshots/read_at/compact on the exclusive
+    rename commit."""
+    sink = _sink(spark, tmp_path)
     sink.insert_if_absent("t", _mk(spark, 0, 1))
     sink.insert_if_absent("t", _mk(spark, 1, 2))  # 1 replays
     sink.insert_if_absent("t", _mk(spark, 3))
@@ -68,58 +55,12 @@ def test_protocol_basic_contract(spark, tmp_path, protocol):
     assert sink.read("t").count() == 4
 
 
-def test_objectstore_layout_never_renames_data(spark, tmp_path):
-    """The objectstore protocol's data directories are written once at
-    their permanent content-addressed location: the commit artifact is
-    the seg_<n>.json object, and no seg_<n> DIRECTORY ever exists."""
-    sink = _sink(spark, tmp_path, "objectstore")
-    sink.insert_if_absent("t", _mk(spark, 0, 1))
-    sink.insert_if_absent("t", _mk(spark, 2))
-    entries = {e.name for e in (tmp_path / "t").iterdir()}
-    assert "seg_0.json" in entries and "seg_1.json" in entries
-    assert not any(
-        e == "seg_0" or e == "seg_1" for e in entries
-    ), "objectstore protocol must not create renamed segment dirs"
-    assert any(e.startswith("data_") for e in entries)
-
-
-def test_objectstore_publish_is_exclusive(spark, tmp_path):
-    """create-if-absent of the commit object refuses a taken number —
-    the conditional-PUT loser signal."""
-    sink = _sink(spark, tmp_path, "objectstore")
-    sink.insert_if_absent("t", _mk(spark, 1))
-    stage = sink._stage_segment("t", _mk(spark, 2))
-    assert sink._publish("t", stage, 0) is False
-    assert {r["k"] for r in sink.read("t").collect()} == {1}
-    assert sink._publish("t", stage, 1) is True
-    assert {r["k"] for r in sink.read("t").collect()} == {1, 2}
-
-
-def test_objectstore_crashed_artifacts_invisible(spark, tmp_path):
-    """An orphan data directory (writer died before commit) is
-    invisible; a half-written commit object is invisible but CLAIMS
-    its number (never re-issued — a reuse would corrupt history)."""
-    sink = _sink(spark, tmp_path, "objectstore")
-    sink.insert_if_absent("t", _mk(spark, 0))
-    # crashed writer: staged data, no commit object
-    orphan = sink._stage_segment("t", _mk(spark, 99))
-    assert orphan  # exists on disk
-    assert {r["k"] for r in sink.read("t").collect()} == {0}
-    # half-written commit object: claims number 1, invisible
-    (tmp_path / "t" / "seg_1.json").write_text("")
-    assert sink.snapshots("t") == [0]
-    sink.insert_if_absent("t", _mk(spark, 2))
-    assert sink.snapshots("t") == [0, 2], "claimed number must be skipped"
-    assert {r["k"] for r in sink.read("t").collect()} == {0, 2}
-
-
-@pytest.mark.parametrize("protocol", PROTOCOLS)
-def test_concurrent_writers_exactly_once(spark, tmp_path, protocol):
-    """The racing-writers exactly-once property holds on BOTH commit
-    primitives (r10 proved it for rename only)."""
+def test_concurrent_writers_exactly_once(spark, tmp_path):
+    """Two racing writers commit every key exactly once and keep the
+    snapshot numbers dense."""
     root = str(tmp_path)
-    w1 = _sink(spark, root, protocol)
-    w2 = _sink(spark, root, protocol)
+    w1 = _sink(spark, root)
+    w2 = _sink(spark, root)
     batches1 = [list(range(2 * b, 2 * b + 30, 2)) for b in range(3)]
     batches2 = [list(range(3 * b, 3 * b + 45, 3)) for b in range(3)]
     errs = []
@@ -144,63 +85,6 @@ def test_concurrent_writers_exactly_once(spark, tmp_path, protocol):
     assert set(got) == expect, "lost rows"
     snaps = w1.snapshots("t")
     assert snaps == list(range(len(snaps)))
-
-
-def test_objectstore_compaction_racing_ingest(spark, tmp_path):
-    """Compaction loop racing an ingest loop on the objectstore
-    primitive: exactly-once survives, history stays dense."""
-    root = str(tmp_path)
-    wi = _sink(spark, root, "objectstore")
-    wc = _sink(spark, root, "objectstore")
-    wi.insert_if_absent("t", _mk(spark, -1, -2))
-    wi.insert_if_absent("t", _mk(spark, -3))
-    errs = []
-    gate = threading.Barrier(2)
-
-    def ingest():
-        try:
-            gate.wait()
-            for b in range(4):
-                wi.insert_if_absent(
-                    "t", _mk(spark, *range(10 * b, 10 * b + 10))
-                )
-        except Exception as e:  # pragma: no cover
-            errs.append(e)
-
-    def compactor():
-        try:
-            gate.wait()
-            for _ in range(3):
-                wc.compact("t", delete_covered=False)
-        except Exception as e:  # pragma: no cover
-            errs.append(e)
-
-    t1 = threading.Thread(target=ingest)
-    t2 = threading.Thread(target=compactor)
-    t1.start(), t2.start()
-    t1.join(), t2.join()
-    assert not errs, errs
-    expect = {-1, -2, -3} | set(range(40))
-    got = [r["k"] for r in wi.read("t").collect()]
-    assert len(got) == len(set(got)) and set(got) == expect
-    snaps = wi.snapshots("t")
-    assert snaps == list(range(len(snaps)))
-
-
-def test_objectstore_gc_removes_commit_objects(spark, tmp_path):
-    """Superseded segments on the objectstore protocol lose BOTH the
-    data dir and the commit object at the next batch's start — while
-    their snapshot ids survive in the covering manifest."""
-    sink = _sink(spark, tmp_path, "objectstore")
-    sink.insert_if_absent("t", _mk(spark, 0))
-    sink.insert_if_absent("t", _mk(spark, 1))
-    sink.compact("t", delete_covered=False)
-    assert (tmp_path / "t" / "seg_0.json").exists()
-    sink.insert_if_absent("t", _mk(spark, 2))  # start-of-batch GC
-    assert not (tmp_path / "t" / "seg_0.json").exists()
-    assert not (tmp_path / "t" / "seg_1.json").exists()
-    assert sink.snapshots("t") == [0, 1, 2, 3]
-    assert {r["k"] for r in sink.read_at("t", 1).collect()} == {0, 1}
 
 
 # ---------------------------------------------------------------- #
@@ -293,8 +177,8 @@ def test_compaction_republishes_without_restaging(spark, tmp_path):
     """A compaction that loses its publish to a RACING INGEST (targets
     all still live) must re-attempt the publish with the SAME staged
     covering segment at the fresh number — not restage the whole
-    rewrite (the starvation/write-amplification bug the async
-    scalecheck exposed: one full rewrite per lost race)."""
+    rewrite (the starvation/write-amplification bug a compaction
+    under sustained ingest exposed: one full rewrite per lost race)."""
     sink = _sink(spark, tmp_path)
     for b in range(3):
         sink.insert_if_absent("t", _mk(spark, 2 * b, 2 * b + 1))
@@ -361,32 +245,6 @@ def test_tiered_history_preserved_across_partial_compactions(
         for r in sink.added_between("t", 1, 4).collect()
     )
     assert diff_after == diff_before
-
-
-def test_async_compaction_keeps_batches_bounded_and_commits(
-    spark, tmp_path
-):
-    """compact_async: the triggering insert returns without paying the
-    rewrite; the background merge commits; correctness and the live
-    bound hold after join."""
-    sink = _sink(
-        spark, tmp_path, auto_compact_segments=3, compact_async=True
-    )
-    for b in range(8):
-        sink.insert_if_absent("t", _mk(spark, 2 * b, 2 * b + 1))
-    sink.wait_for_compactions()
-    live, _, _ = sink._segments("t")
-    assert any(c is not None for _, _, c in live), (
-        "background compaction never committed"
-    )
-    assert {r["k"] for r in sink.read("t").collect()} == set(range(16))
-    # next batch GCs deferred dirs and may re-trigger; state stays exact
-    sink.insert_if_absent("t", _mk(spark, 100))
-    sink.wait_for_compactions()
-    assert sink.read("t").count() == 17
-    snaps = sink.snapshots("t")
-    assert set(range(8)) <= set(snaps)
-    assert {r["k"] for r in sink.read_at("t", 2).collect()} == set(range(6))
 
 
 # ---------------------------------------------------------------- #
@@ -563,10 +421,10 @@ def test_expire_below_sink_row_semantics(spark, tmp_path):
     assert sink.read("t").count() == 5
 
 
-def test_facades_accept_objectstore_sink_kwargs(spark, tmp_path):
+def test_facades_forward_sink_kwargs(spark, tmp_path):
     """The streaming warehouse constructors forward make_sink options:
-    an admission warehouse on the objectstore commit protocol behaves
-    identically and produces the objectstore layout."""
+    the option lands on the built sink, which keeps the admission
+    contract."""
     from near_real_time_data_warehouse_prototype_for_metro_shopping_store_in_pakistan_spark.streaming.corpus import (
         LINES_CURATED_TABLE,
         admit_lines_batch,
@@ -574,23 +432,15 @@ def test_facades_accept_objectstore_sink_kwargs(spark, tmp_path):
     )
 
     wh = lines_warehouse(
-        spark,
-        str(tmp_path),
-        sink_kwargs={"commit_protocol": "objectstore"},
+        spark, str(tmp_path), sink_kwargs={"tier_factor": 3.0}
     )
+    assert isinstance(wh, ManifestParquetSink) and wh.tier_factor == 3.0
     batch = spark.createDataFrame(
         [(1, "alpha beta\ngamma delta")], "doc_id long, text string"
     )
     admit_lines_batch(wh, batch, min_docs=2)
     admit_lines_batch(wh, batch, min_docs=2)  # replay no-op
     assert wh.read(LINES_CURATED_TABLE).count() == 1
-    entries = {
-        e.name for e in (tmp_path / LINES_CURATED_TABLE).iterdir()
-    }
-    assert any(e.endswith(".json") for e in entries)
-    assert not any(
-        e.startswith("seg_") and not e.endswith(".json") for e in entries
-    ), "objectstore protocol must not create renamed segment dirs"
 
 
 def test_stream_curate_lines_with_auto_ttl(spark, tmp_path):
@@ -820,18 +670,13 @@ class TestTokenModes:
 
 
 def test_make_sink_rejects_protocol_knobs_off_manifest(spark, tmp_path):
-    with pytest.raises(ValueError, match="commit_protocol"):
+    with pytest.raises(ValueError, match="materialize_tombstones_after"):
         make_sink(
             spark, str(tmp_path), keys={"t": ["k"]},
-            backend="delta", commit_protocol="objectstore",
+            backend="delta", materialize_tombstones_after=2,
         )
-    with pytest.raises(ValueError, match="unknown commit_protocol"):
+    with pytest.raises(ValueError, match="tier_factor"):
         make_sink(
             spark, str(tmp_path), keys={"t": ["k"]},
-            backend="manifest", commit_protocol="s3",
-        )
-    with pytest.raises(ValueError, match="compact_async"):
-        make_sink(
-            spark, str(tmp_path), keys={"t": ["k"]},
-            backend="delta", compact_async=True,
+            backend="delta", tier_factor=3.0,
         )

@@ -7,6 +7,8 @@ PIL image tests)."""
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -186,13 +188,24 @@ def test_manifest_options_validated_by_backend_name(spark, tmp_path):
                 {"insert_if_absent": None}, {"keys": {}}):
         with pytest.raises(ValueError, match="unknown sink option"):
             warehouse_for(spark, root, sink_kwargs=bad)
-    with pytest.raises(ValueError, match="unknown commit_protocol"):
-        warehouse_for(spark, root, sink_kwargs={"commit_protocol": "s3"})
+    # removed options are unknown names, not aliases
+    remaining = (
+        r"\['auto_compact_segments', 'stats_cols', "
+        r"'allow_schema_evolution', 'tier_factor', "
+        r"'materialize_tombstones_after'\]"
+    )
+    for gone in ({"commit_protocol": "rename"}, {"compact_async": True}):
+        with pytest.raises(ValueError, match="unknown sink option.*" + remaining):
+            warehouse_for(spark, root, sink_kwargs=gone)
+    with pytest.raises(TypeError, match="compact_async"):
+        make_sink(spark, root, keys={}, compact_async=True)
     wh = warehouse_for(
-        spark, root, sink_kwargs={"tier_factor": 3.0, "compact_async": True}
+        spark,
+        root,
+        sink_kwargs={"tier_factor": 3.0, "materialize_tombstones_after": 2},
     )
     assert wh.root == root
-    assert (wh.tier_factor, wh.compact_async) == (3.0, True)
+    assert (wh.tier_factor, wh.materialize_tombstones_after) == (3.0, 2)
     # the warehouse's own zone-map default survives unrelated options
     assert wh.stats_cols == {"sales_fact": ["order_date"]}
 
@@ -1050,6 +1063,97 @@ def test_zone_map_timestamp_pruning(spark, tmp_path):
         sink.scan("t", {"ts": (lo2, None)}) is None
         or sink.scan("t", {"ts": (lo2, None)}).count() == 0
     )
+
+
+@pytest.fixture(scope="module")
+def day_edge_sink(spark, tmp_path_factory):
+    """Four segments around midnight of 2024-01-05, zone-mapped on a
+    timestamp column ``ts`` and a date column ``d``."""
+    sink = make_sink(
+        spark,
+        str(tmp_path_factory.mktemp("day_edge")),
+        keys={"t": ["k"]},
+        backend="manifest",
+        stats_cols={"t": ["ts", "d"]},
+    )
+    segments = [
+        [dt.datetime(2024, 1, 4, 22), dt.datetime(2024, 1, 4, 23, 30)],
+        [dt.datetime(2024, 1, 5)],  # the midnight row
+        [dt.datetime(2024, 1, 5, 9), dt.datetime(2024, 1, 5, 9, 30)],
+        [dt.datetime(2024, 1, 6, 12)],
+    ]
+    k = 0
+    for stamps in segments:
+        rows = []
+        for ts in stamps:
+            rows.append((k, ts, ts.date()))
+            k += 1
+        sink.insert_if_absent(
+            "t", spark.createDataFrame(rows, "k long, ts timestamp, d date")
+        )
+    return sink
+
+
+_BOUND_FORMS = {
+    "datetime": lambda t: t,
+    "date": lambda t: t.date(),
+    "space": lambda t: t.strftime("%Y-%m-%d %H:%M:%S"),
+    "iso_t": lambda t: t.strftime("%Y-%m-%dT%H:%M:%S"),
+}
+
+_DAY = dt.datetime(2024, 1, 5)
+_H = dt.timedelta(hours=1)
+
+# (case, column, lo, hi, segments a scan keeps)
+_DAY_EDGE_CASES = [
+    ("ts_upto_midnight", "ts", None, _DAY, 2),  # ON the midnight row
+    ("ts_from_midnight", "ts", _DAY, None, 3),
+    ("ts_upto_10h", "ts", None, _DAY + 10 * _H, 3),
+    ("ts_from_9h15", "ts", _DAY + 9.25 * _H, None, 2),
+    ("ts_day_start", "ts", _DAY, _DAY + 9.5 * _H, 2),
+    # a date column casts a string bound to its date, but compares
+    # with a datetime bound as midnight: 10:00 starts the next day
+    ("d_from_10h", "d", _DAY + 10 * _H, None,
+     {"datetime": 1, "space": 3, "iso_t": 3}),
+    ("d_upto_23h", "d", None, _DAY - _H, 1),
+]
+
+
+def _day_edge_params():
+    for case, col, lo, hi, kept in _DAY_EDGE_CASES:
+        for form, fmt in _BOUND_FORMS.items():
+            bounds = [b for b in (lo, hi) if b is not None]
+            if form == "date" and any(b.time() != dt.time() for b in bounds):
+                continue  # a date bound only names a midnight
+            yield pytest.param(
+                col,
+                None if lo is None else fmt(lo),
+                None if hi is None else fmt(hi),
+                kept[form] if isinstance(kept, dict) else kept,
+                id=f"{case}-{form}",
+            )
+
+
+@pytest.mark.parametrize("col, lo, hi, kept", list(_day_edge_params()))
+def test_zone_map_scan_equals_filter_for_every_time_bound_form(
+    day_edge_sink, col, lo, hi, kept
+):
+    """scan(name, r) ≡ read(name).filter(r) whatever form a time
+    bound takes — a ``date`` or a string bound is compared by time,
+    not as text against the stats' ISO strings — and pruning still
+    skips the segments outside the range."""
+    sink = day_edge_sink
+    want_df = sink.read("t")
+    if lo is not None:
+        want_df = want_df.filter(F.col(col) >= F.lit(lo))
+    if hi is not None:
+        want_df = want_df.filter(F.col(col) <= F.lit(hi))
+    want = sorted(r["k"] for r in want_df.collect())
+    assert want, "every case selects at least one row"
+    got_df = sink.scan("t", {col: (lo, hi)})
+    got = [] if got_df is None else sorted(r["k"] for r in got_df.collect())
+    assert got == want
+    assert sink.prune_report("t", {col: (lo, hi)}) == (4, kept)
 
 
 def test_zorder_compaction_bounds_both_columns(spark, tmp_path):

@@ -1,7 +1,7 @@
 """Key-targeted delete (takedown / right-to-be-forgotten) across the
 sink backends, plus its cascade through the corpus admission surfaces
-and the persisted ANN indexes, plus the background-compaction failure
-observability that replaced the silent retry loop.
+and the persisted ANN indexes, plus how an inline auto-compaction
+failure surfaces.
 
 Semantics pinned here (see ManifestParquetSink.delete_keys):
 - matched rows vanish from EVERY read, including every historical
@@ -39,9 +39,6 @@ BACKEND_PARAMS = [
         ),
     ),
 ]
-
-PROTOCOLS = ["rename", "objectstore"]
-
 
 def _sink(spark, root, backend, **kw):
     return make_sink(spark, str(root), keys={"t": ["k"]}, backend=backend, **kw)
@@ -113,11 +110,8 @@ def test_delete_null_key_matches_null_row(spark, tmp_path, backend):
     assert {r.k for r in sink.read("t").collect()} == {1}
 
 
-@pytest.mark.parametrize("protocol", PROTOCOLS)
-def test_manifest_delete_redacts_all_snapshots(spark, tmp_path, protocol):
-    sink = _sink(
-        spark, tmp_path, "manifest", commit_protocol=protocol
-    )
+def test_manifest_delete_redacts_all_snapshots(spark, tmp_path):
+    sink = _sink(spark, tmp_path, "manifest")
     sink.insert_if_absent("t", _rows(spark, [(1, "a"), (2, "b")]))
     sink.insert_if_absent("t", _rows(spark, [(3, "c")]))
     snaps_before = sink.snapshots("t")
@@ -178,12 +172,11 @@ def test_manifest_delete_after_compaction(spark, tmp_path):
         assert ks.isdisjoint({1, 3})
 
 
-@pytest.mark.parametrize("protocol", PROTOCOLS)
-def test_manifest_delete_racing_ingest(spark, tmp_path, protocol):
+def test_manifest_delete_racing_ingest(spark, tmp_path):
     """A delete racing concurrent inserts serializes through OCC: no
     corruption, deleted pre-existing keys gone, disjoint concurrent
     inserts intact."""
-    sink = _sink(spark, tmp_path, "manifest", commit_protocol=protocol)
+    sink = _sink(spark, tmp_path, "manifest")
     sink.insert_if_absent(
         "t", _rows(spark, [(k, f"v{k}") for k in range(50)])
     )
@@ -340,83 +333,39 @@ def test_ann_index_takedown_removes_served_neighbor(spark, tmp_path):
     assert {r.vec_id for r in admitted.collect()} == {999}
 
 
-# -- background-compaction observability --------------------------------
+# -- inline auto-compaction failure ------------------------------------
 
 
-def _failing(sink, monkeypatch):
-    calls = {"n": 0}
+def test_inline_auto_compaction_failure_propagates_and_retries(
+    spark, tmp_path, monkeypatch
+):
+    """A failing auto-compaction raises to the insert that triggered
+    it, after that batch committed (no row lost), and the next insert
+    re-evaluates the policy and compacts."""
+    sink = _sink(spark, tmp_path, "manifest", auto_compact_segments=1)
+    sink.insert_if_absent("t", _rows(spark, [(0, "x")]))
     real = ManifestParquetSink.compact
 
     def boom(self, name, **kw):
-        calls["n"] += 1
         raise OSError("disk full (injected)")
 
     monkeypatch.setattr(ManifestParquetSink, "compact", boom)
-    return calls, real
-
-
-def test_background_compaction_failures_counted_and_breaker_opens(
-    spark, tmp_path, monkeypatch
-):
-    metrics = tmp_path / "sink_metrics.jsonl"
-    sink = _sink(
-        spark,
-        tmp_path / "t",
-        "manifest",
-        auto_compact_segments=1,
-        compact_async=True,
-        metrics_path=str(metrics),
-    )
-    sink.compact_error_limit = 3
-    calls, real_compact = _failing(sink, monkeypatch)
-    with pytest.warns(RuntimeWarning, match="DISABLED"):
-        for i in range(6):
-            sink.insert_if_absent("t", _rows(spark, [(i, "x")]))
-            sink.wait_for_compactions()
-    st = sink.compaction_errors("t")
-    assert st["disabled"] is True
-    assert st["consecutive"] == 3  # breaker stopped further retries
-    assert "disk full" in st["last_error"]
-    # no re-trigger once open: more inserts, no more compact calls
-    n = calls["n"]
-    for i in range(10, 13):
-        sink.insert_if_absent("t", _rows(spark, [(i, "x")]))
-        sink.wait_for_compactions()
-    assert calls["n"] == n
-    # JSONL feed recorded the failures and the breaker event
-    lines = metrics.read_text().strip().splitlines()
-    assert sum('"compaction_failure"' in ln for ln in lines) == 3
-    assert any('"compaction_disabled"' in ln for ln in lines)
-    # a successful explicit compact closes the breaker and re-arms
-    monkeypatch.setattr(ManifestParquetSink, "compact", real_compact)
-    assert sink.compact("t") is not None
-    st = sink.compaction_errors("t")
-    assert st["disabled"] is False and st["consecutive"] == 0
-    assert any(
-        '"compaction_recovered"' in ln
-        for ln in metrics.read_text().splitlines()
-    )
-    # data path never lost a row through any of it
-    assert sink.read("t").count() == 9
-
-
-def test_inline_auto_compaction_failure_propagates_and_counts(
-    spark, tmp_path, monkeypatch
-):
-    sink = _sink(spark, tmp_path, "manifest", auto_compact_segments=1)
-    sink.insert_if_absent("t", _rows(spark, [(0, "x")]))
-    _failing(sink, monkeypatch)
     with pytest.raises(OSError, match="disk full"):
         sink.insert_if_absent("t", _rows(spark, [(1, "x")]))
-    assert sink.compaction_errors("t")["total"] == 1
+    assert {r.k for r in sink.read("t").collect()} == {0, 1}
+    assert all(c is None for _, _, c in sink._segments("t")[0])
+    monkeypatch.setattr(ManifestParquetSink, "compact", real)
+    sink.insert_if_absent("t", _rows(spark, [(2, "x")]))
+    live = sink._segments("t")[0]
+    assert len(live) == 1 and list(live[0][2]) == [0, 1, 2]
+    assert {r.k for r in sink.read("t").collect()} == {0, 1, 2}
 
 
 # -- tombstone (deletion-vector) mode ------------------------------------
 
 
-@pytest.mark.parametrize("protocol", PROTOCOLS)
-def test_tombstone_delete_hides_without_rewrite(spark, tmp_path, protocol):
-    sink = _sink(spark, tmp_path, "manifest", commit_protocol=protocol)
+def test_tombstone_delete_hides_without_rewrite(spark, tmp_path):
+    sink = _sink(spark, tmp_path, "manifest")
     sink.insert_if_absent("t", _rows(spark, [(1, "a"), (2, "b"), (3, "c")]))
     sink.insert_if_absent("t", _rows(spark, [(4, "d")]))
     data_before = {n for n, _, _ in sink._segments("t")[0]}
